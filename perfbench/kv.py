@@ -17,7 +17,7 @@ from cdc_cascade_spark.streaming.sinks import InMemoryKVStore
 class CountingKV(InMemoryKVStore):
     def __init__(self) -> None:
         super().__init__()
-        self.gets = self.hits = self.sets = self.useless_deletes = 0
+        self.gets = self.hits = self.sets = self.deletes = self.useless_deletes = 0
         self.del_times: dict[str, list[float]] = defaultdict(list)
 
     def get(self, key: str) -> str | None:
@@ -34,21 +34,19 @@ class CountingKV(InMemoryKVStore):
 
     def delete(self, key: str) -> None:
         with self._lock:
+            self.deletes += 1
             if self._data.pop(key, None) is None:
                 self.useless_deletes += 1
             self.del_times[key].append(time.monotonic())
 
-    def preload(self, items: dict[str, str]) -> None:
-        """Fill the cache without counting the writes as traffic."""
+    def reset_counts(self) -> None:
+        """Forget the traffic so far (counters and DEL times), keep the data."""
         with self._lock:
-            self._data.update(items)
-
-    @property
-    def deletes_total(self) -> int:
-        return sum(len(v) for v in self.del_times.values())
+            self.gets = self.hits = self.sets = self.deletes = self.useless_deletes = 0
+            self.del_times.clear()
 
     def metrics(self) -> dict[str, float]:
-        dels = self.deletes_total
+        dels = self.deletes
         return {
             "kv.gets": self.gets,
             "kv.sets": self.sets,

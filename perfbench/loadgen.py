@@ -1,18 +1,15 @@
 """Load generator, run as its own process apart from the system under test.
 
-Three modes, each driven by a JSON spec on the command line:
+Two modes, each driven by a JSON spec on the command line:
 
-- ``paced``: writes Debezium-envelope files into a file source on a
-  fixed schedule that does not slow down when the system does. Each
-  file is written to a temporary path and renamed in, so the source
-  never lists a half-written file.
-- ``backlog``: writes a Zipf-keyed backlog of envelope files and the
-  latest-wins model of the table they describe.
+- ``backlog``: writes a Zipf-keyed backlog of Debezium-envelope files
+  and the latest-wins model of the table they describe. Each file is
+  written to a temporary path and renamed in, so the file source never
+  lists a half-written file.
 - ``api``: a closed-loop HTTP client on one thread and one persistent
   HTTP/1.1 connection.
 
-Every mode writes a JSON report (lateness, CPU time, per-request
-records) to the path in the spec. Times are ``time.monotonic()``
+Every mode writes a JSON report (CPU time, per-request records) to the path in the spec. Times are ``time.monotonic()``
 readings, comparable across processes on the same machine.
 
 Usage: python3 loadgen.py <mode> '<json spec>'
@@ -29,24 +26,6 @@ import random
 import sys
 import time
 
-# Composition of one paced file, in lines. Every update/delete touches
-# its own key, so each DEL maps to exactly one scheduled send time.
-PACED_MIX = {"u": 300, "d": 40, "c": 50, "tombstone": 10}
-PACED_LINES = sum(PACED_MIX.values())
-PACED_CHANGES = PACED_MIX["u"] + PACED_MIX["d"]
-# Every MALFORMED_EVERY-th file also carries MALFORMED_LINES truncated
-# envelopes. Kept sparse: a batch holding one pays an extra quarantine
-# write, and most batches should measure the clean path.
-MALFORMED_EVERY, MALFORMED_LINES = 12, 5
-
-
-def paced_malformed(n_files: int) -> int:
-    """Malformed lines in paced files 0 .. n_files - 1."""
-    return -(-n_files // MALFORMED_EVERY) * MALFORMED_LINES
-
-
-CREATE_KEY_BASE = 10_000_000  # create-only keys never collide with cached ones
-
 _TS = "2024-01-01T00:00:00"
 
 
@@ -62,64 +41,21 @@ def envelope(op: str, lsn: int, before: dict | None, after: dict | None) -> str:
         "op": op, "ts_ms": lsn}}, separators=(",", ":"))
 
 
-def paced_file(seed: int, index: int) -> tuple[list[str], list[str], list[str]]:
-    """Lines of paced file ``index``, its updated/deleted keys and its
-    created keys. Pure in (seed, index), so the system under test can
-    rebuild the expectations without talking to the generator."""
-    rng = random.Random(seed * 1_000_003 + index)
-    kinds = [k for k, n in PACED_MIX.items() for _ in range(n)]
-    if index % MALFORMED_EVERY == 0:
-        kinds += ["malformed"] * MALFORMED_LINES
-    rng.shuffle(kinds)
-    lines, changed, created = [], [], []
-    nxt_change = index * PACED_CHANGES
-    nxt_create = CREATE_KEY_BASE + index * PACED_MIX["c"]
-    for pos, kind in enumerate(kinds):
-        lsn = index * (PACED_LINES + MALFORMED_LINES) + pos + 1
-        if kind in ("u", "d"):
-            code, nxt_change = nxt_change, nxt_change + 1
-            before = row(code, f"n{code}", "old")
-            after = None if kind == "d" else row(code, f"n{code}", f"v{rng.randrange(10**6)}")
-            lines.append(envelope(kind, lsn, before, after))
-            changed.append(str(code))
-        elif kind == "c":
-            code, nxt_create = nxt_create, nxt_create + 1
-            lines.append(envelope("c", lsn, None, row(code, f"n{code}", "new")))
-            created.append(str(code))
-        elif kind == "tombstone":
-            lines.append("")
-        else:
-            lines.append('{"payload": {"before": {"code": ' + str(lsn))  # truncated JSON
-    return lines, changed, created
-
-
-def _write_atomic(src_dir: str, tmp_dir: str, name: str, text: str, mtime: float | None = None) -> None:
+def _write_atomic(src_dir: str, tmp_dir: str, name: str, text: str, mtime: float) -> None:
     tmp = os.path.join(tmp_dir, name)
     with open(tmp, "w") as f:
         f.write(text)
-    if mtime is not None:
-        os.utime(tmp, (mtime, mtime))
+    os.utime(tmp, (mtime, mtime))
     os.rename(tmp, os.path.join(src_dir, name))
 
 
-def run_paced(spec: dict) -> dict:
-    """Write paced files ``first .. first + n_files - 1``, file i due at
-    ``t0 + (i - first) * period``."""
-    t0, period, first = spec["t0"], spec["period"], spec.get("first", 0)
-    late = []
-    for i in range(first, first + spec["n_files"]):
-        lines, _, _ = paced_file(spec["seed"], i)
-        text = "\n".join(lines) + "\n"
-        due = t0 + (i - first) * period
-        wait = due - time.monotonic()
-        if wait > 0:
-            time.sleep(wait)
-        _write_atomic(spec["src_dir"], spec["tmp_dir"], f"f{i:06d}.json", text)
-        late.append(time.monotonic() - due)
-    return {"late_s": late}
+# Key skew of both workloads: the Zipfian constant of the YCSB core
+# workloads (Cooper et al., "Benchmarking Cloud Serving Systems with
+# YCSB", SoCC 2010).
+ZIPF_S = 0.99
 
 
-def zipf_sampler(rng: random.Random, n: int, s: float):
+def zipf_sampler(rng: random.Random, n: int, s: float = ZIPF_S):
     """Bounded Zipf over ranks 0..n-1 (rank 0 most frequent)."""
     cdf = list(itertools.accumulate(1.0 / (k + 1) ** s for k in range(n)))
     total = cdf[-1]
@@ -133,7 +69,7 @@ def backlog_events(seed: int, n_events: int, n_keys: int):
     one time in ten, after which the key's next event creates it again.
     """
     rng = random.Random(seed)
-    draw = zipf_sampler(rng, n_keys, 1.1)
+    draw = zipf_sampler(rng, n_keys)
     state: dict[int, dict] = {}
     for lsn in range(1, n_events + 1):
         code = draw()
@@ -174,12 +110,16 @@ def run_backlog(spec: dict) -> dict:
         n_file += 1
     with open(spec["model_path"], "w") as f:
         json.dump({k: v for k, v in model.items() if v is not None}, f)
-    return {"files": n_file, "late_s": [0.0]}
+    return {"files": n_file}
 
 
 # --- closed-loop API client ------------------------------------------------
 
-API_MIX = (("read", 0.40), ("update", 0.50), ("create", 0.05), ("delete", 0.05))
+# YCSB workload A ("update heavy": 50% reads, 50% updates, Zipfian keys),
+# with a tenth of each taken for creates and deletes so those endpoints
+# are timed too. Updates at this share are what give the invalidation
+# lag enough samples for a tail in one run.
+API_MIX = (("read", 0.45), ("update", 0.45), ("create", 0.05), ("delete", 0.05))
 _PREFIX = "/api/v1/sinners"
 
 
@@ -196,11 +136,14 @@ def run_api(spec: dict) -> dict:
     the timed mix for ``seconds``. Only timed requests are recorded."""
     rng = random.Random(spec["seed"])
     n_keys = spec["n_keys"]
-    draw = zipf_sampler(rng, n_keys, 1.1)
+    draw = zipf_sampler(rng, n_keys)
     # The client's model of the table: key -> libram of the last acked
     # write, None once deleted.
     model: dict[int, str | None] = {k: "init" for k in range(n_keys)}
     next_create = n_keys
+    # Deletes take the oldest key the client created, never a Zipf-drawn
+    # one: the drawn keys all stay live, so the mix stays as drawn.
+    created: list[int] = []
     # One connection: with two used in turn, responses alternate between
     # ~1 ms and ~43 ms (the delayed-ACK stall hits every other one), and
     # a median taken over a 50/50 mixture jumps between the two modes.
@@ -213,17 +156,20 @@ def run_api(spec: dict) -> dict:
         while time.monotonic() < deadline:
             _request(conn, "GET", f"{_PREFIX}/read/{warm_rng.randrange(n_keys)}", None)
             n += 1
-        warm_requests = n
         open(spec["marker_path"], "w").close()
         deadline = time.monotonic() + spec["seconds"]
         while time.monotonic() < deadline:
             op = rng.choices(ops, weights)[0]
             key = draw()
-            if op != "create" and model.get(key) is None:
-                op = "create"  # the drawn key is deleted: create a fresh one
+            if op == "delete":
+                if created:
+                    key = created.pop(0)
+                else:
+                    op = "create"
             body = None
             if op == "create":
                 key, next_create = next_create, next_create + 1
+                created.append(key)
                 method, path, body, expect = "POST", f"{_PREFIX}/create", row(key, f"n{key}", "init"), 201
             elif op == "read":
                 method, path, expect = "GET", f"{_PREFIX}/read/{key}", 200
@@ -246,12 +192,12 @@ def run_api(spec: dict) -> dict:
             n += 1
     finally:
         conn.close()
-    return {"records": records, "model": model, "warm_requests": warm_requests, "late_s": [0.0]}
+    return {"records": records, "model": model}
 
 
 def main(argv: list[str]) -> int:
     mode, spec = argv[1], json.loads(argv[2])
-    run = {"paced": run_paced, "backlog": run_backlog, "api": run_api}[mode]
+    run = {"backlog": run_backlog, "api": run_api}[mode]
     out = run(spec)
     out["cpu_s"] = time.process_time()
     with open(spec["report_path"], "w") as f:

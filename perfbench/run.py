@@ -2,15 +2,15 @@
 
 Usage, from the root of a checkout:
 
-    python3 perfbench/run.py --workload cascade_paced --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload view_catchup --seed 1 --seconds 30 --trace 0
 
 Workloads (see perfbench/METRICS.md for what each measures and why):
-cascade_paced, view_catchup, api_cache_aside.
+view_catchup, api_cache_aside.
 
 With ``--trace 0`` the last stdout line carries the end-to-end metrics;
 with ``--trace 1`` it carries the per-layer metrics, and the spans are
 dumped to ``.perfbench_out/``. The line before it is a JSON stamp of the
-run: machine, versions, load, seed, generator lateness, which PIDs the
+run: machine, versions, load, seed, CPU steal, which PIDs the
 memory figure counted, the tail percentiles used and the run's
 validity. Everything the run writes stays inside the checkout; scratch
 files go to ``.perfbench_work/`` and are removed at exit.
@@ -49,7 +49,6 @@ PER_LAYER_UNITS = {
     "streaming.sinks.invalidate_batch_ms": "ms",
     "streaming.sinks.upsert_view_batch_ms": "ms",
     "streaming.sinks.keys_per_batch": "count",
-    "cdc.envelope.dead_letters": "count",
     "kv.gets": "count",
     "kv.sets": "count",
     "kv.deletes": "count",
@@ -63,7 +62,6 @@ PER_LAYER_UNITS = {
     "serving.cycle_events": "count",
     "serving.cycles": "count",
     "api.self_ms": "ms",
-    "loadgen.late_max_ms": "ms",
     "loadgen.cpu_s": "s",
     "jvm.gc_ms": "ms",
     "jvm.gc_count": "count",

@@ -4,19 +4,22 @@ For every end-to-end metric of every workload it prints the median, the
 quartiles, the quartile spread ((q3 - q1) / median) and the largest
 relative deviation from the median, and compares the spread with the
 metric's bound in BENCHMARK.json. A spread wider than a third of the
-bound is reported as unresolved. ``setup_s`` is held to its bound only
-by its median, so its spread is reported but not judged. Runs whose
-stamp marks them invalid (generator late, paced backlog growing, CPU
-stolen by the hypervisor) are listed, and a second set of figures
+bound is reported as unresolved. Runs whose stamp marks them invalid
+(CPU stolen by the hypervisor) are listed, and a second set of figures
 leaves them out; the first set keeps them, as a validity-blind reader
 of the results would.
 
 With ``--overhead`` each seed also runs traced, and the report adds the
 traced run's change of each end-to-end metric: the tracing overhead.
 
+``--compare a.json b.json`` reads two saved reports of the same code and
+prints, per workload and metric, how far the second median is from the
+first in the worse direction, against the metric's bound.
+
 Usage, from the root of a checkout:
 
     python3 perfbench/steadiness.py --runs 10 [--workloads a,b] [--overhead] [--out report.json]
+    python3 perfbench/steadiness.py --compare first.json second.json
 """
 
 from __future__ import annotations
@@ -57,11 +60,31 @@ def summarize(runs: list[dict], bench: dict) -> dict:
         if not vals:
             continue
         s = stats.quartile_spread(vals)
-        judged = m["name"] != "setup_s"
-        s.update(bound=m["bound"], values=vals,
-                 unresolved=judged and s["spread"] > m["bound"] / 3)
+        s.update(bound=m["bound"], values=vals, unresolved=s["spread"] > m["bound"] / 3)
         out[m["name"]] = s
     return out
+
+
+def compare(first: dict, second: dict, bench: dict) -> bool:
+    """Print the second report's median change against the first, in the
+    worse direction, per workload and metric; True if all are in bound."""
+    ok = True
+    for w, entry in first.items():
+        if w not in second:
+            continue
+        print(f"== {w}")
+        for m in bench["end_to_end"]:
+            a = entry["metrics"].get(m["name"])
+            b = second[w]["metrics"].get(m["name"])
+            if not (a and b):
+                continue
+            change = (b["median"] - a["median"]) / a["median"]
+            worse = change if m["better"] == "lower" else -change
+            good = worse <= m["bound"]
+            ok &= good
+            print(f"  {m['name']:18s} first {a['median']:12.4f}  second {b['median']:12.4f}"
+                  f"  worse by {worse:+.4f}  bound {m['bound']}  {'ok' if good else 'OUT OF BOUND'}")
+    return ok
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -71,9 +94,16 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--workloads", default="")
     ap.add_argument("--overhead", action="store_true")
     ap.add_argument("--out", default="")
+    ap.add_argument("--compare", nargs=2, metavar=("FIRST", "SECOND"))
     args = ap.parse_args(argv)
     with open("BENCHMARK.json") as f:
         bench = json.load(f)
+    if args.compare:
+        reports = []
+        for path in args.compare:
+            with open(path) as f:
+                reports.append(json.load(f))
+        return 0 if compare(*reports, bench) else 1
     names = args.workloads.split(",") if args.workloads else [w["name"] for w in bench["workloads"]]
     report: dict = {}
     for w in names:

@@ -159,22 +159,35 @@ def test_tracer_nests_spans_and_is_inert_when_off():
     assert off.spans == []
 
 
+def test_patch_times_calls_and_unpatch_restores(tmp_path):
+    import types
+
+    import workloads
+
+    class Service:
+        def read(self, k):
+            return k * 2
+
+    def helper(x):
+        return x + 1
+
+    module = types.SimpleNamespace(helper=helper)
+    service = Service()
+    args = types.SimpleNamespace(seed=1, seconds=1, trace=1, workload="w")
+    ctx = workloads.Context(args, str(tmp_path), str(tmp_path / "out"), str(tmp_path))
+    try:
+        seen = []
+        ctx.patch(module, "helper", "m.helper", lambda call: seen.append(call()) or seen[-1])
+        ctx.patch(service, "read", "s.read")
+        assert module.helper(1) == 2 and service.read(3) == 6 and seen == [2]
+        assert [s[1] for s in ctx.tracer.spans] == ["m.helper", "s.read"]
+        ctx.unpatch()
+        assert module.helper is helper and "read" not in vars(service)
+    finally:
+        ctx.rss.stop()
+
+
 # --- generator inputs -------------------------------------------------------------
-
-def test_paced_files_are_pure_and_keys_unique():
-    a, b = loadgen.paced_file(3, 7), loadgen.paced_file(3, 7)
-    assert a == b
-    keys = [k for i in range(60) for k in loadgen.paced_file(3, i)[1]]
-    assert len(keys) == len(set(keys)) == 60 * loadgen.PACED_CHANGES
-    created = [k for i in range(60) for k in loadgen.paced_file(3, i)[2]]
-    assert not set(created) & set(keys)
-    malformed = sum(1 for i in range(60) for line in loadgen.paced_file(3, i)[0]
-                    if line and not line.endswith("}"))
-    assert malformed == loadgen.paced_malformed(60)
-    for i in range(30):
-        extra = loadgen.MALFORMED_LINES if i % loadgen.MALFORMED_EVERY == 0 else 0
-        assert len(loadgen.paced_file(3, i)[0]) == loadgen.PACED_LINES + extra
-
 
 def test_backlog_events_form_a_valid_changelog():
     state: dict[int, dict] = {}
@@ -205,7 +218,7 @@ def test_refuses_to_run_without_the_program(tmp_path):
     shutil.copytree(BENCH, tmp_path / "perfbench",
                     ignore=shutil.ignore_patterns("__pycache__", ".pytest_cache"))
     out = subprocess.run(
-        [sys.executable, "perfbench/run.py", "--workload", "cascade_paced", "--seed", "1",
+        [sys.executable, "perfbench/run.py", "--workload", "view_catchup", "--seed", "1",
          "--seconds", "1", "--trace", "0"],
         cwd=tmp_path, capture_output=True, text=True, timeout=170)
     assert out.returncode != 0

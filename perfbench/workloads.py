@@ -36,6 +36,9 @@ def process_age_s() -> float:
     return time.clock_gettime(time.CLOCK_BOOTTIME) - start_ticks / os.sysconf("SC_CLK_TCK")
 
 
+_ABSENT = object()  # marks a patched name the owner did not hold itself
+
+
 @dataclass
 class Result:
     e2e: dict
@@ -121,31 +124,41 @@ class Context:
             raise RuntimeError(f"load generator exited with {rc}")
         with open(report) as f:
             out = json.load(f)
-        late = out.get("late_s") or [0.0]
-        self.layer["loadgen.late_max_ms"] = max(late) * 1000.0
         self.layer["loadgen.cpu_s"] = out.get("cpu_s", 0.0)
         return out
 
     # -- traced wrappers around the program's public functions ---------------
-    def wrap(self, module, name: str, span: str) -> None:
-        """Replace ``module.name`` with a span-recording wrapper for the
-        traced run. The untraced run installs nothing, so it measures the
-        program unchanged."""
+    def patch(self, owner, name: str, span: str, hook=None) -> None:
+        """Traced run only: replace ``owner.name`` (a module function or
+        an instance's method) with a wrapper that records ``span`` around
+        each call. ``hook(call)``, if given, makes the call itself inside
+        the span, to observe it (e.g. count what it wrote). The untraced
+        run installs nothing, so it measures the program unchanged."""
         if not self.trace:
             return
-        orig = getattr(module, name)
+        orig = getattr(owner, name)
         tracer = self.tracer
 
         def timed(*a, **kw):
             with tracer.span(span):
-                return orig(*a, **kw)
+                if hook is None:
+                    return orig(*a, **kw)
+                return hook(lambda: orig(*a, **kw))
 
-        self._patches.append((module, name, orig))
-        setattr(module, name, timed)
+        self._patches.append((owner, name, vars(owner).get(name, _ABSENT)))
+        setattr(owner, name, timed)
+
+    def unpatch(self) -> None:
+        """Put back everything ``patch`` replaced."""
+        while self._patches:
+            owner, name, orig = self._patches.pop()
+            if orig is _ABSENT:
+                delattr(owner, name)
+            else:
+                setattr(owner, name, orig)
 
     def close(self) -> None:
-        for module, name, orig in reversed(self._patches):
-            setattr(module, name, orig)
+        self.unpatch()
         if self._gen is not None:
             self._gen.kill()
             self._gen.wait()
@@ -225,44 +238,6 @@ def stream_layer_metrics(batches: list[dict], backlog: list[int]) -> dict:
     }
 
 
-def _wrap_sink(ctx: Context, name: str, span: str, current_store, samples: list) -> None:
-    """Time the foreachBatch sink ``pipeline.<name>`` in the traced run and
-    count the keys each call wrote to ``current_store()``."""
-    import cdc_cascade_spark.streaming.pipeline as pipeline
-
-    def writes() -> int:
-        st = current_store()
-        return st.sets + st.deletes_total
-
-    orig = getattr(pipeline, name)
-
-    def counted(*a, **kw):
-        n0 = writes()
-        out = orig(*a, **kw)
-        samples.append(writes() - n0)
-        return out
-
-    if ctx.trace:
-        setattr(pipeline, name, counted)
-        ctx._patches.append((pipeline, name, orig))
-        ctx.wrap(pipeline, name, span)
-
-
-# --- cascade_paced -------------------------------------------------------------
-
-PACED_PERIOD_S = 0.2        # one 400-line file every 200 ms: 2,000 lines/s
-# About 2 files reach each batch, one task each. Near 4 files per batch
-# (the core count) a batch needs one or two task waves, and runs settle
-# in either mode, so 100 ms files gave two distinct lag levels.
-PACED_PRIME_FILES = 5       # written before the query starts; its first
-                            # batch compiles and JITs the whole plan
-PACED_WARM_S = 5.0          # paced traffic in set-up, checked but not timed;
-                            # batches keep speeding up for about 5 s
-PACED_MAX_FILES = 64        # per trigger; far above what arrives per batch
-PACED_DRAIN_TIMEOUT_S = 15.0
-LATE_LIMIT_MS = 50.0        # generator lateness that invalidates a run
-
-
 def source_log_files(checkpoint: str) -> dict[int, int]:
     """Files each micro-batch read, from the file source's metadata log
     in the checkpoint (plain and ``.compact`` entries carry batchId)."""
@@ -280,126 +255,30 @@ def source_log_files(checkpoint: str) -> dict[int, int]:
     return {b: len(paths) for b, paths in per_batch.items()}
 
 
-def cascade_paced(ctx: Context) -> Result:
-    import loadgen
-    from cdc_cascade_spark.streaming.pipeline import (
-        read_cdc_files, read_quarantine, start_invalidation_pipeline)
+def patch_sink(ctx: Context, caller, name: str, current_store, samples: list) -> None:
+    """Time the sink function ``name`` where ``caller`` (the module that
+    calls it) looks it up, in the traced run, and count the keys each
+    call wrote to ``current_store()``."""
 
-    n_prime = PACED_PRIME_FILES
-    n_warm = round(PACED_WARM_S / PACED_PERIOD_S)
-    n_timed = max(1, round(ctx.seconds / PACED_PERIOD_S))
-    n_files = n_prime + n_warm + n_timed
-    expected = [loadgen.paced_file(ctx.seed, i) for i in range(n_files)]
-    src, staging, qdir = ctx.mkdir("src"), ctx.mkdir("staging"), ctx.path("quarantine")
-    gen_spec = {"seed": ctx.seed, "src_dir": src, "tmp_dir": staging}
-    report = ctx.start_generator("paced", dict(
-        gen_spec, first=0, n_files=n_prime, t0=time.monotonic(), period=0.0))
-    spark = ctx.start_spark()
-    ctx.wait_generator(report, timeout=60)
-    store = CountingKV()
-    store.preload({k: "cached" for _, changed, _ in expected for k in changed})
-    sink_keys: list[int] = []
-    _wrap_sink(ctx, "invalidate_batch", "streaming.sinks.invalidate_batch", lambda: store, sink_keys)
-    ckpt = ctx.path("ckpt")
-    query = start_invalidation_pipeline(
-        read_cdc_files(spark, src, max_files_per_trigger=PACED_MAX_FILES),
-        store, ckpt, quarantine_dir=qdir)
-    query.processAllAvailable()
-    t0 = time.monotonic() + 0.2
-    report = ctx.start_generator("paced", dict(
-        gen_spec, first=n_prime, n_files=n_warm + n_timed, t0=t0, period=PACED_PERIOD_S))
-    due = lambda i: t0 + (i - n_prime) * PACED_PERIOD_S  # noqa: E731
-    timed_start = due(n_prime + n_warm)
-    time.sleep(max(0.0, timed_start - time.monotonic()))
-    mark, n_keys0 = len(ctx.tracer.spans), len(sink_keys)
-    setup_s = process_age_s()
-    gc0 = ctx.gc_totals()
-    ctx.wait_generator(report, timeout=PACED_WARM_S + ctx.seconds + 30)
-    all_changed = [k for _, changed, _ in expected for k in changed]
-    deadline = time.monotonic() + PACED_DRAIN_TIMEOUT_S
-    while time.monotonic() < deadline and any(k not in store.del_times for k in all_changed[-200:]):
-        time.sleep(0.02)
-    query.processAllAvailable()
-    gc1 = ctx.gc_totals()
-    mono_of_epoch = time.monotonic() - time.time()
-    progress = list(query.recentProgress)
-    query.stop()
-    add_batch_spans(ctx.tracer, [p for p in progress if _progress_start(p) + mono_of_epoch >= timed_start],
-                    "streaming.sinks.invalidate_batch", mark)
+    def count_writes(call):
+        st = current_store()
+        n0 = st.sets + st.deletes
+        out = call()
+        samples.append(st.sets + st.deletes - n0)
+        return out
 
-    # Lag: scheduled send time of each timed change -> its DEL landing.
-    timed_files = range(n_prime + n_warm, n_files)
-    changes = [(k, due(i)) for i in timed_files for k in expected[i][1]]
-    lags, missing = stats.join_lags(changes, store.del_times)
-    _, early_missing = stats.join_lags(
-        [(k, 0.0) for i in range(n_prime + n_warm) for k in expected[i][1]], store.del_times)
-    missing += early_missing
-    created = [k for _, _, c in expected for k in c]
-    wrong_dels = sum(1 for k in created if k in store.del_times)
-    n_malformed = loadgen.paced_malformed(n_files)
-    dead = read_quarantine(spark, qdir).count()
-
-    # Backlog at each timed batch's start: files renamed in by then
-    # (from the schedule) minus files the earlier batches read.
-    files_of = source_log_files(ckpt)
-    consumed, backlog, timed_batches = 0, [], []
-    for p in sorted(progress, key=lambda p: p["batchId"]):
-        n = files_of.get(p["batchId"], 0)
-        if n == 0:
-            continue
-        start = _progress_start(p) + mono_of_epoch
-        if start >= timed_start:
-            arrived = n_prime + min(n_warm + n_timed, max(0, int((start - t0) / PACED_PERIOD_S) + 1))
-            backlog.append(max(0, arrived - consumed))
-            # Lines of the files read, not counting the sparse malformed ones.
-            timed_batches.append(dict(p, numInputRows=n * loadgen.PACED_LINES))
-        consumed += n
-    batch_lat = [_progress_ms(p, "triggerExecution") for p in timed_batches]
-
-    lag_p50, lag_tail, lag_pct = stats.median_and_tail(lags, support=len(timed_batches)) if lags else (0, 0, None)
-    lat_p50, lat_tail, lat_pct = stats.median_and_tail(batch_lat) if batch_lat else (0, 0, None)
-    t_last = max((store.del_times[k][0] for k, _ in changes if k in store.del_times), default=timed_start)
-    e2e = {
-        "setup_s": setup_s,
-        "throughput_per_s": len(lags) / max(1e-9, t_last - timed_start),
-        "latency_p50_ms": lat_p50,
-        "latency_tail_ms": lat_tail,
-        "lag_p50_ms": lag_p50 * 1000.0,
-        "lag_tail_ms": lag_tail * 1000.0,
-    }
-    ctx.layer.update(stream_layer_metrics(timed_batches, backlog))
-    ctx.layer.update(store.metrics())
-    ctx.layer["cdc.envelope.dead_letters"] = dead
-    ctx.layer["jvm.gc_ms"], ctx.layer["jvm.gc_count"] = gc1[0] - gc0[0], gc1[1] - gc0[1]
-    if sink_keys[n_keys0:]:
-        ctx.layer["streaming.sinks.invalidate_batch_ms"] = statistics.median(
-            ctx.tracer.durations("streaming.sinks.invalidate_batch", since=mark)) * 1000
-        ctx.layer["streaming.sinks.keys_per_batch"] = statistics.median(sink_keys[n_keys0:])
-    late_ms = ctx.layer["loadgen.late_max_ms"]
-    third = max(1, len(backlog) // 3)
-    growing = len(backlog) >= 6 and statistics.mean(backlog[-third:]) > statistics.mean(backlog[:third]) + 2
-    failed = len(missing) + wrong_dels + abs(dead - n_malformed)
-    return ctx.finish(e2e, attempted=len(all_changed) + len(created) + n_malformed, failed=failed, info={
-        "valid": late_ms <= LATE_LIMIT_MS and not growing,
-        "offered_lines_per_s": loadgen.PACED_LINES / PACED_PERIOD_S,
-        "lag_tail_percentile": lag_pct, "lag_support_batches": len(timed_batches),
-        "latency_tail_percentile": lat_pct, "latency_samples": len(batch_lat),
-        "latency_is": "micro-batch duration",
-        "missing_dels": len(missing), "create_keys_deleted": wrong_dels,
-        "dead_letters": dead, "malformed_injected": n_malformed,
-        "backlog_growing": growing, "backlog_files": backlog,
-        "loadgen_late_max_ms": late_ms,
-    })
+    ctx.patch(caller, name, f"streaming.sinks.{name}", count_writes)
 
 
 # --- view_catchup --------------------------------------------------------------
 
 CATCHUP_EVENTS = 120_000     # backlog drained from an empty checkpoint
-CATCHUP_KEYS = 20_000        # Zipf(1.1) over these: batches compact heavily
+CATCHUP_KEYS = 20_000        # Zipf-keyed (loadgen.ZIPF_S): batches compact heavily
 CATCHUP_FILE_EVENTS = 10_000
 CATCHUP_MAX_FILES = 2        # per trigger: 6 batches of 20,000 events per drain
-CATCHUP_MIN_DRAINS = 4       # timed drains even past --seconds: 24 batches
-                             # keep a tail percentile above the median
+CATCHUP_DRAIN_S = 5.0        # a drain's time on 4 cores: sets the drain count
+CATCHUP_MIN_DRAINS = 4       # 24 batches keep a tail percentile above the median
+CATCHUP_WARM_DRAINS = 3      # untimed: drain times kept falling through the third
 
 
 def _check_view(snapshot: dict[str, str], model: dict[str, dict]) -> int:
@@ -414,6 +293,7 @@ def _check_view(snapshot: dict[str, str], model: dict[str, dict]) -> int:
 
 
 def view_catchup(ctx: Context) -> Result:
+    import cdc_cascade_spark.streaming.pipeline as pipeline
     from cdc_cascade_spark.streaming.pipeline import (
         read_cdc_files, start_materialized_view_pipeline)
 
@@ -428,8 +308,7 @@ def view_catchup(ctx: Context) -> Result:
         model = json.load(f)
     sink_keys: list[int] = []
     stores: list[CountingKV] = []
-    _wrap_sink(ctx, "upsert_view_batch", "streaming.sinks.upsert_view_batch",
-               lambda: stores[-1], sink_keys)
+    patch_sink(ctx, pipeline, "upsert_view_batch", lambda: stores[-1], sink_keys)
 
     def drain(i: int):
         since = len(ctx.tracer.spans)
@@ -446,18 +325,21 @@ def view_catchup(ctx: Context) -> Result:
         add_batch_spans(ctx.tracer, progress, "streaming.sinks.upsert_view_batch", since)
         return secs, wall0, progress, source_log_files(ckpt), _check_view(store.snapshot(), model)
 
-    warm = [drain(0)]  # untimed: the first drain compiles and JITs the plan
+    # Untimed: the first drain compiles the plan, and the JIT keeps
+    # speeding up the next two.
+    warm = [drain(i) for i in range(CATCHUP_WARM_DRAINS)]
     sink_keys.clear()
     mark = len(ctx.tracer.spans)
     setup_s = process_age_s()
     gc0 = ctx.gc_totals()
-    drains, t_end = [], time.perf_counter() + ctx.seconds
-    while len(drains) < CATCHUP_MIN_DRAINS or time.perf_counter() < t_end:
-        drains.append(drain(len(drains) + 1))
+    # A fixed number of drains for the time asked, not as many as fit:
+    # the batch count, and so the tail percentile, is the same every run.
+    n_drains = max(CATCHUP_MIN_DRAINS, round(ctx.seconds / CATCHUP_DRAIN_S))
+    drains = [drain(CATCHUP_WARM_DRAINS + i) for i in range(n_drains)]
     gc1 = ctx.gc_totals()
 
     n_files = -(-CATCHUP_EVENTS // CATCHUP_FILE_EVENTS)
-    batches, backlog, lags, weights = [], [], [], []
+    batches, backlog, lags = [], [], []
     for secs, wall0, progress, files_of, _ in drains:
         consumed = 0
         for p in sorted(progress, key=lambda p: p["batchId"]):
@@ -467,12 +349,10 @@ def view_catchup(ctx: Context) -> Result:
             backlog.append(n_files - consumed)
             consumed += n
             batches.append(dict(p, numInputRows=n * CATCHUP_FILE_EVENTS))
+            # Catch-up lag: drain start -> commit of the batch. Every
+            # batch carries the same number of events.
             lags.append(_progress_end(p) - wall0)
-            weights.append(n * CATCHUP_FILE_EVENTS)
-    # Catch-up lag of an event: drain start -> commit of the batch that
-    # applied it, weighted by the events each batch carried.
-    lag_events = [lag for lag, w in zip(lags, weights) for _ in range(w // 1000)]
-    lag_p50, lag_tail, lag_pct = stats.median_and_tail(lag_events, support=len(batches))
+    lag_p50, lag_tail, lag_pct = stats.median_and_tail(lags)
     batch_lat = [_progress_ms(p, "triggerExecution") for p in batches]
     lat_p50, lat_tail, lat_pct = stats.median_and_tail(batch_lat)
     e2e = {
@@ -498,7 +378,7 @@ def view_catchup(ctx: Context) -> Result:
         "untimed_drain_s": [round(d[0], 4) for d in warm],
         "lag_tail_percentile": lag_pct, "lag_support_batches": len(batches),
         "latency_tail_percentile": lat_pct, "latency_samples": len(batch_lat),
-        "latency_is": "micro-batch duration", "lag_is": "drain start to batch commit, per event",
+        "latency_is": "micro-batch duration", "lag_is": "drain start to batch commit, per batch",
         "view_mismatches": failed,
     })
 
@@ -506,13 +386,17 @@ def view_catchup(ctx: Context) -> Result:
 # --- api_cache_aside -------------------------------------------------------------
 
 API_KEYS = 2_000            # rows preloaded through the service
-API_CYCLE_GAP_S = 2.5       # consumer sleeps this long between cycles
+API_CYCLE_PERIOD_S = 4.0    # the consumer starts a cycle on this fixed cadence;
+                            # each cycle stalls the one request it overlaps, and
+                            # fewer than ten stalls per run keep the latency tail
+                            # (ten samples beyond it) on unstalled requests
 API_WARM_S = 2.0            # client warm-up reads, untimed
 API_WARM_CYCLES = 6         # consumer cycles run in set-up to JIT the cycle
 API_WARM_KEY_BASE = 1_000_000  # rows only the warm-up cycles touch
 
 
 def api_cache_aside(ctx: Context) -> Result:
+    import cdc_cascade_spark.serving as serving
     import loadgen
     from cdc_cascade_spark.api import CdcApiServer
     from cdc_cascade_spark.serving import CdcTableService, NotFound
@@ -531,34 +415,15 @@ def api_cache_aside(ctx: Context) -> Result:
         t0 = time.perf_counter()
         service.run_invalidation_cycle()
         warm_cycles.append(round(time.perf_counter() - t0, 4))
-    store.del_times.clear()
-    store.useless_deletes = 0
-    store.gets = store.hits = store.sets = 0
-
-    serving_calls: list[tuple[str, float, float]] = []  # (method, start, end)
-    depth = threading.local()
-
-    def timed_method(name):
-        orig = getattr(service, name)
-
-        def call(*a, **kw):
-            outer = not getattr(depth, "n", 0)
-            depth.n = getattr(depth, "n", 0) + 1
-            t0 = time.monotonic()
-            try:
-                return orig(*a, **kw)
-            finally:
-                depth.n -= 1
-                if outer:
-                    serving_calls.append((name, t0, time.monotonic()))
-        return call
-
-    if ctx.trace:
-        for name in ("read_one", "update", "create", "delete"):
-            setattr(service, name, timed_method(name))
+    store.reset_counts()
+    serving_ops = ("read_one", "update", "create", "delete")
+    for name in serving_ops:
+        ctx.patch(service, name, f"serving.{name}")
+    sink_keys: list[int] = []
+    patch_sink(ctx, serving, "invalidate_batch", lambda: store, sink_keys)
 
     server = CdcApiServer(service, port=0).start()
-    cycles: list[tuple[float, int]] = []
+    cycles: list[tuple[float, float, int]] = []  # (monotonic start, seconds, envelopes)
     stop = threading.Event()
 
     def consume() -> None:
@@ -566,12 +431,16 @@ def api_cache_aside(ctx: Context) -> Result:
         # marks every envelope appended while it ran as consumed. The
         # consumer therefore takes the server's own mutation lock, as the
         # request handlers do.
-        while not stop.wait(API_CYCLE_GAP_S):
+        # Fixed cadence: a write waits for the next slot, not for a gap
+        # after a cycle of varying length. A cycle that overruns its
+        # slot skips to the next one.
+        start = time.monotonic()
+        while not stop.wait(API_CYCLE_PERIOD_S - (time.monotonic() - start) % API_CYCLE_PERIOD_S):
             with server._lock:
-                t0 = time.perf_counter()
+                t0 = time.monotonic()
                 with ctx.tracer.span("serving.run_invalidation_cycle"):
                     n = service.run_invalidation_cycle()
-                cycles.append((time.perf_counter() - t0, n))
+                cycles.append((t0, time.monotonic() - t0, n))
 
     consumer = threading.Thread(target=consume, name="cdc-consumer", daemon=True)
     consumer.start()
@@ -590,17 +459,24 @@ def api_cache_aside(ctx: Context) -> Result:
         stop.set()
         consumer.join(timeout=60)
     gc1 = ctx.gc_totals()
+    ctx.layer.update(store.metrics())  # the timed phase's traffic, not the checks'
+    ctx.unpatch()
     with server._lock:
         service.run_invalidation_cycle()  # final quiesce
     server.shutdown_with_timeout()
-    for name in ("read_one", "update", "create", "delete"):
-        service.__dict__.pop(name, None)
 
     records = gen["records"]
     bad_status = sum(1 for r in records if not r[5])
     writes = [(str(key), t1) for op, key, t0, t1, status, ok in records
               if ok and op in ("update", "delete")]
-    lags, missing = stats.join_lags(writes, store.del_times)
+    _, missing = stats.join_lags(writes, store.del_times)
+    # Lag counts the writes the consumer's own cycles invalidated: those
+    # acknowledged before the last timed cycle started. Later ones wait
+    # only for the final quiesce, which runs as soon as the client stops,
+    # so their lag would depend on where the run's end falls in a cycle.
+    timed_cycles = cycles[n_cycles0:]
+    last_cycle = timed_cycles[-1][0] if timed_cycles else float("inf")
+    lags, _ = stats.join_lags([w for w in writes if w[1] < last_cycle], store.del_times)
     stale = 0
     for key, lib in gen["model"].items():
         try:
@@ -620,28 +496,32 @@ def api_cache_aside(ctx: Context) -> Result:
         "lag_p50_ms": lag_p50 * 1000.0,
         "lag_tail_ms": lag_tail * 1000.0,
     }
-    ctx.layer.update(store.metrics())
     ctx.layer["jvm.gc_ms"], ctx.layer["jvm.gc_count"] = gc1[0] - gc0[0], gc1[1] - gc0[1]
-    timed_cycles = cycles[n_cycles0:]
     info_extra = {}
     if timed_cycles:
-        ctx.layer["serving.cycle_ms"] = statistics.median(c for c, _ in timed_cycles) * 1000
-        ctx.layer["serving.cycle_events"] = statistics.median(n for _, n in timed_cycles)
+        ctx.layer["serving.cycle_ms"] = statistics.median(c for _, c, _ in timed_cycles) * 1000
+        ctx.layer["serving.cycle_events"] = statistics.median(n for _, _, n in timed_cycles)
     ctx.layer["serving.cycles"] = len(timed_cycles)
+    if sink_keys:
+        ctx.layer["streaming.sinks.invalidate_batch_ms"] = statistics.median(
+            ctx.tracer.durations("streaming.sinks.invalidate_batch")) * 1000
+        ctx.layer["streaming.sinks.keys_per_batch"] = statistics.median(sink_keys)
     if ctx.trace:
-        calls = serving_calls[gen["warm_requests"]:]
-        if len(calls) != len(records):
-            raise RuntimeError(f"{len(calls)} serving calls for {len(records)} requests")
-        for name in ("read_one", "update", "create", "delete"):
-            us = [(e - s) * 1e6 for n, s, e in calls if n == name]
+        # Request spans from the client's clock. Each becomes the parent
+        # of the outermost serving call inside it (the client has one
+        # request in flight), so the request's self time is the API's.
+        names = {f"serving.{n}" for n in serving_ops}
+        timed_t0 = records[0][2]
+        outer = [sp for sp in ctx.tracer.spans if sp[1] in names and sp[4] is None and sp[2] >= timed_t0]
+        if len(outer) != len(records):
+            raise RuntimeError(f"{len(outer)} serving calls for {len(records)} requests")
+        for name in serving_ops:
+            us = [(e - s) * 1e6 for _, n, s, e, _, _ in outer if n == f"serving.{name}"]
             ctx.layer[f"serving.{name}_us"] = statistics.median(us) if us else 0.0
-        # Request spans from the client's clock, each the parent of the
-        # serving call it caused; the request's self time is the API's.
-        mark = len(ctx.tracer.spans)
-        for i, ((op, key, t0, t1, _, _), (name, s, e)) in enumerate(zip(records, calls)):
+        for i, (op, key, t0, t1, _, _) in enumerate(records):
             sid = ctx.tracer.add("api.request", t0, t1, tag=f"{i}:{op}:{key}")
-            ctx.tracer.add(f"serving.{name}", s, e, tag=i, parent=sid)
-        api_self = self_time_by_span(ctx.tracer.spans[mark:])["api.request"]
+            ctx.tracer.adopt(sid, t0, t1, names)
+        api_self = self_time_by_span(ctx.tracer.spans)["api.request"]
         ctx.layer["api.self_ms"] = statistics.median(api_self) * 1000.0
         info_extra = {"api_self_share_of_latency_p50": ctx.layer["api.self_ms"] / lat_p50}
     failed = bad_status + len(missing) + stale
@@ -656,7 +536,6 @@ def api_cache_aside(ctx: Context) -> Result:
 
 
 WORKLOADS = {
-    "cascade_paced": cascade_paced,
     "view_catchup": view_catchup,
     "api_cache_aside": api_cache_aside,
 }
