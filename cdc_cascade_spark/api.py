@@ -10,9 +10,9 @@ controllers/controllers.go:24-119 status codes) on the Python stdlib
     PUT    /api/v1/sinners/update/:code  200 | 400 | 404
     DELETE /api/v1/sinners/delete/:code  200 | 400 | 404
 
-Point routes never touch Spark (they hit the service's maintained
-materialized view + cache-aside KV), so the HTTP layer stays driver-
-thread-cheap; only ``/read`` (full scan) runs a Spark plan.
+No route touches Spark: every one is served from the service's
+maintained materialized view + cache-aside KV, so the HTTP layer stays
+driver-thread-cheap.
 
 Shutdown follows the reference's signal choreography (main.go:21-68):
 SIGINT/SIGTERM → stop accepting HTTP (bounded 5 s) → wait for the
@@ -56,14 +56,18 @@ class CdcApiServer:
             # HTTP/1.1 enables chunked transfer for the streamed full
             # scan; every other response carries Content-Length.
             protocol_version = "HTTP/1.1"
+            # Headers and body are two writes: with Nagle on, the body
+            # waits for the client's delayed ACK (~40 ms), and a consumer
+            # cycle can DEL a written key before its client has the ack.
+            disable_nagle_algorithm = True
 
             def log_message(self, fmt, *args):  # B7 logging stays opt-in
                 pass
 
             def _send_json_stream(self, row_iter) -> None:
-                """Chunked-transfer JSON array: one partition of rows in
-                driver memory at a time, never a full-table collect. The
-                byte stream is identical to ``json.dumps(list(rows))``."""
+                """Chunked-transfer JSON array, sent 32 KiB at a time: the
+                full-table body is never built in memory. The byte
+                stream is identical to ``json.dumps(list(rows))``."""
                 self.send_response(200)
                 self.send_header("Content-Type", "application/json")
                 self.send_header("Transfer-Encoding", "chunked")
@@ -117,7 +121,7 @@ class CdcApiServer:
                         if method == "POST" and action == "create" and code is None:
                             self._send(201, api.service.create(self._body()))
                         elif method == "GET" and action == "read" and code is None:
-                            self._send_json_stream(api._iter_all_rows())
+                            self._send_json_stream(api.service.read_all())
                         elif method == "GET" and action == "read":
                             self._send(200, api.service.read_one(code))
                         elif method == "PUT" and action == "update" and code:
@@ -145,27 +149,6 @@ class CdcApiServer:
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self._thread: threading.Thread | None = None
-
-    def _iter_all_rows(self):
-        """Key-ordered row dicts for ``GET /read``, streamed.
-
-        The sort runs INSIDE the Spark plan (a distributed range sort,
-        not a driver-side list sort) and ``toLocalIterator`` then pulls
-        one partition at a time — the driver never funnels the whole
-        table the way ``collect()`` would (reference controllers.go:38-46
-        is an unbounded ``SELECT *`` to HTTP; same semantics, bounded
-        driver memory).
-        """
-        from datetime import datetime
-
-        df = self.service.read_all()
-        key = self.service.key_field
-        for r in df.orderBy(df[key].asc_nulls_first()).toLocalIterator():
-            d = r.asDict()
-            for k, v in d.items():
-                if isinstance(v, datetime):
-                    d[k] = v.strftime("%Y-%m-%dT%H:%M:%S")
-            yield d
 
     @property
     def port(self) -> int:

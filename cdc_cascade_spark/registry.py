@@ -70,63 +70,25 @@ from pyspark.sql import DataFrame, SparkSession
 CHECK_WINDOW = 50
 
 CHECK_FIRST: list[str] = [
-    # --- r18 window: ALL 33 queries whose fingerprint closure this
-    # optimization round touched (curation/pipeline/incremental/
-    # calibration consume-once + broadcast shapes; retrieval-family
-    # thread-pool materialization incl. functions/concurrent.py;
-    # similarity.py driver-side query buckets + shared label exchange;
-    # bm25_index stats-collect guard), machine-computed as
-    # {name: fingerprint != committed manifest} — the regen gate
-    # refuses to bless any changed query that is not in this window —
-    # PLUS overlap_join_order_windows (ranges.py changed in r17 but
-    # fell outside the r17 driver sample; its only fresh evidence is
-    # the in-repo property test, so it gets the driver row the r17
-    # ADVICE ordered) and lm_score_filter (carried a model-broadcast
-    # edit this round that review flagged as an unbounded broadcast
-    # and was REVERTED to its r17-verified bytes; pinned so the driver
-    # re-verifies the reverted face anyway). 35 pins: 33 changed + 2.
-    # -- retrieval family (bm25_index / retrieval_summary /
-    #    retrieval_indexed / chunkeval / hybrid / concurrent.py) --
-    "retrieval_mrr_indexed",
-    "retrieval_mrr_summary",
-    "chunk_retrieval_eval",
-    "hybrid_retrieval_rrf",
-    # -- curation / pipeline / incremental / calibration --
-    "contamination_check",
-    "curate_corpus",
-    "curate_corpus_segmented",
-    "curation_audit",
-    "curation_audit_segmented",
-    "curate_corpus_incremental",
-    "curation_invalidation_report",
-    "quality_calibration_report",
-    "label_quality_profile",
-    "stratified_sample",
-    "stratified_sample_exact",
-    "pii_redaction",
-    "quality_floor_filter",
-    # -- similarity closure (driver-side multitable buckets, shared
-    #    label exchange, dead-binding removal) --
-    "ann_lsh_multitable_topk",
-    "embedding_top_pairs",
-    "dedup_embedding_cosine",
-    "ann_cosine_topk",
-    "ann_int8_topk",
-    "ann_lsh_topk",
-    "ann_lsh_multiprobe_topk",
-    "ann_ivf_topk",
-    "ann_ivf_kmeans_topk",
-    "ann_lsh_indexed",
-    "ann_ivf_indexed",
-    "ann_recall_report",
-    "knn_join_topk",
-    "embedding_quantize",
-    "embedding_cluster_profile",
-    "label_skew_report",
-    # -- r17-changed, never driver-sampled (ADVICE #2) --
-    "overlap_join_order_windows",
-    # -- model-join broadcast (lm_score.py) --
-    "lm_score_filter",
+    # Every query whose fingerprint closure changed since the committed
+    # manifest (cdc/envelope.py gained the driver-side
+    # ``invalidation_key``), plus every frozen query whose last green
+    # row is 3+ reports old (r15, against CORRECTNESS_r18). The r18
+    # pins are all green in CORRECTNESS_r18 and rotated out.
+    # -- changed closure: cdc/envelope.py --
+    "cdc_latest_state",
+    "cdc_invalidation_summary",
+    "cdc_op_routing",
+    "cdc_scd2_history",
+    # -- over the staleness budget (last green r15) --
+    "packing_efficiency",
+    "q05_order_priority_semi",
+    "q33_hopping_windows",
+    "quantile_histogram",
+    "range_join_signup_activity",
+    "shingle_containment",
+    "source_dedup_matrix",
+    "token_budget_selection",
 ]
 
 # Best-effort re-evidence tier: placed immediately after CHECK_FIRST,
@@ -134,26 +96,45 @@ CHECK_FIRST: list[str] = [
 # margin guarantee (if the driver's window is a few entries short of
 # 50 they lose their row, which is acceptable) — use ONLY for
 # fingerprint-frozen queries whose sole need is a fresher green row,
-# never for changed or new code. r18: 14 slots (35 + 14 = 49, one
-# slot under the window for margin) pre-pay the rotation debt with the
-# stalest frozen queries — machine-recomputed last-green over
-# CORRECTNESS_r01–r17 puts every entry below at r15, the oldest green
-# cohort in the registry.
+# never for changed or new code. Here: every other frozen query whose
+# last green row is r16, the oldest cohort left (12 + 35 = 47, inside
+# the window with margin). The r18 CHECK_NEXT entries got their rows.
 CHECK_NEXT: list[str] = [
-    "asof_latest_order",
-    "asof_prev_click_tolerance",
-    "corpus_diff",
-    "corpus_mixture_plan",
-    "corpus_mixture_sample",
-    "corpus_profile",
-    "corpus_split",
-    "doc_chunks",
-    "dq_constraint_report",
-    "embedding_quality_report",
-    "events_gap_fill",
-    "events_gap_fill_segmented",
-    "events_hot_keys",
-    "minhash_novelty",
+    "q03_supplier_volume",
+    "q04_forecast_revenue",
+    "q13_sessionize_events",
+    "q14_pivot_status",
+    "q15_outer_join_part_activity",
+    "q17_tumbling_hourly",
+    "q18_price_percentiles",
+    "q19_cube_volume",
+    "q20_grouping_sets",
+    "q23_timeseries_rollup",
+    "q27_full_outer_join",
+    "q32_range_frame_window",
+    "q34_session_window_stats",
+    "funnel_conversion",
+    "text_stats",
+    "doc_repetition",
+    "bpe_merge_pairs",
+    "bpe_apply_top_merge",
+    "text_salient_terms",
+    "lang_id",
+    "doc_fingerprint",
+    "text_vocabulary",
+    "text_bigrams",
+    "dedup_ngram_jaccard",
+    "dedup_simhash_pairs",
+    "dedup_simhash_weighted",
+    "pack_sequences",
+    "bpe_train_k_merges",
+    "bpe_encode_corpus",
+    "bpe_fertility_by_lang",
+    "gopher_quality_rules",
+    "segment_dedup",
+    "sketch_cms_heavy_hitters",
+    "split_leakage_pairs",
+    "temperature_mixture_sample",
 ]
 
 

@@ -6,12 +6,12 @@ point reads through Redis, with cache coherence owned *exclusively* by
 the CDC consumer (SURVEY.md §3.3). This module re-expresses that
 surface engine-natively:
 
-- the "database" is the LSN-ordered changelog (the Kafka topic analog);
-  reads materialize through latest-wins compaction (cdc/compaction.py)
+- the "database" is the LSN-ordered changelog (the Kafka topic analog)
+  plus a current-state view kept per append
 - B1 create  → append op='c' envelope         (controllers.go:24-36)
-- B2 read_all → full compacted scan           (controllers.go:38-46)
+- B2 read_all → key-ordered scan of the view  (controllers.go:38-46)
 - B3 read_one → cache-aside point lookup:
-  cache hit → return; miss → filter+limit 1 → write-back, no TTL
+  cache hit → return; miss → view lookup → write-back, no TTL
   (controllers.go:48-73; TTL 0 at :68)
 - B4 update  → read-modify-write, op='u', bumps updated_at the way the
   reference's trigger does (init.sql:13-24)  (controllers.go:75-98)
@@ -24,12 +24,14 @@ surface engine-natively:
 
 Scale note: the changelog append path is driver-side by design (it
 models the *ingest boundary*, one event at a time, like an HTTP
-handler). Point reads (B3/B4/B5's read-modify-write) go to a
+handler). Reads (B2, B3 and B4/B5's read-modify-write) go to a
 **materialized current-state view maintained per append** — the same
 latest-wins upsert semantics as ``upsert_view_batch``
 (streaming/sinks.py), applied incrementally at the ingest boundary —
-so a lookup never recompacts the changelog. Full scans (B2) remain a
-Spark compaction plan over the changelog, which doubles as the
+so no read recompacts the changelog. The consumer cycle decodes the
+envelopes the driver already holds (``invalidation_key``), so no
+serving call starts a Spark job. ``changelog()`` exposes the log as a
+DataFrame; latest-wins compaction of it (cdc/compaction.py) is the
 consistency oracle for the view (pinned by tests).
 """
 
@@ -40,16 +42,12 @@ from datetime import datetime, timezone
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from cdc_cascade_spark.cdc.compaction import current_state
-from cdc_cascade_spark.cdc.envelope import (
-    invalidation_keys,
-    parse_envelope,
-    valid_events,
-)
+from cdc_cascade_spark.cdc.envelope import invalidation_key
 from cdc_cascade_spark.cdc.schemas import SINNERS_SCHEMA
-from cdc_cascade_spark.streaming.sinks import KeyValueStore, invalidate_batch
+from cdc_cascade_spark.streaming.sinks import KeyValueStore
+# Re-exported, unused here: perfbench's traced run patches it by name.
+from cdc_cascade_spark.streaming.sinks import invalidate_batch  # noqa: F401
 
 
 class NotFound(KeyError):
@@ -111,20 +109,17 @@ class CdcTableService:
         )
 
     def changelog(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(v,) for v in self._log] or [(None,)], "value string"
-        ).filter(F.col("value").isNotNull())
-
-    def _payloads(self, df: DataFrame) -> DataFrame:
-        return valid_events(parse_envelope(df, self.table_schema))
+        """The envelope log as a Kafka-shaped ``value`` column."""
+        return self.spark.createDataFrame([(v,) for v in self._log], "value string")
 
     # -- B2/B3 reads -------------------------------------------------------
 
-    def read_all(self) -> DataFrame:
-        """Full scan of the compacted current state (B2)."""
-        return current_state(
-            self._payloads(self.changelog()), key_field=self.key_field
-        )
+    def read_all(self) -> list[dict]:
+        """Full scan (B2): current rows in key order, each projected onto
+        the table schema's field order (a missing field is null) — the
+        rows latest-wins compaction of ``changelog()`` yields."""
+        fields = self.table_schema.fieldNames()
+        return [{f: self._view[k].get(f) for f in fields} for k in sorted(self._view)]
 
     def read_one(self, key: Any) -> dict:
         """Cache-aside point lookup (B3): hit → cached JSON; miss →
@@ -179,14 +174,15 @@ class CdcTableService:
         """Consume new envelopes and DEL invalidated keys (the cascade).
 
         Mirrors one poll iteration of the reference consumer: only
-        events with a ``before`` image invalidate; offsets advance after
-        the sink effect (at-least-once; DEL is idempotent).
+        events with a ``before`` image invalidate, and each distinct key
+        is DEL'd once; the offset advances after the sink effect
+        (at-least-once; DEL is idempotent). The end offset is taken
+        first, so an envelope appended while the DELs run is left for
+        the next cycle. Returns the number of envelopes consumed.
         """
-        new = self._log[self._consumed :]
-        if not new:
-            return 0
-        df = self.spark.createDataFrame([(v,) for v in new], "value string")
-        keys = invalidation_keys(self._payloads(df), self.key_field)
-        invalidate_batch(self.cache, keys, self.key_field)
-        self._consumed = len(self._log)
+        end = len(self._log)
+        new = self._log[self._consumed : end]
+        for key in {invalidation_key(v, self.key_field) for v in new} - {None}:
+            self.cache.delete(str(key))
+        self._consumed = end
         return len(new)

@@ -24,3 +24,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF0001
+
+
+@pytest.fixture(scope="session")
+def replayed_rows():
+    """The serving view's oracle: ``service -> rows`` by Spark latest-wins
+    compaction of the service's changelog, key-ordered, timestamps in
+    the service's text format — the rows ``GET /read`` served when it
+    was a Spark plan."""
+    from datetime import datetime
+
+    from cdc_cascade_spark.cdc.compaction import current_state
+    from cdc_cascade_spark.cdc.envelope import parse_envelope, valid_events
+
+    def replay(service) -> list[dict]:
+        df = current_state(valid_events(parse_envelope(service.changelog())))
+        return [
+            {k: v.strftime("%Y-%m-%dT%H:%M:%S") if isinstance(v, datetime) else v
+             for k, v in r.asDict().items()}
+            for r in df.orderBy(service.key_field).collect()
+        ]
+
+    return replay
