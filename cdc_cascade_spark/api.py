@@ -56,10 +56,6 @@ class CdcApiServer:
             # HTTP/1.1 enables chunked transfer for the streamed full
             # scan; every other response carries Content-Length.
             protocol_version = "HTTP/1.1"
-            # Headers and body are two writes: with Nagle on, the body
-            # waits for the client's delayed ACK (~40 ms), and a consumer
-            # cycle can DEL a written key before its client has the ack.
-            disable_nagle_algorithm = True
 
             def log_message(self, fmt, *args):  # B7 logging stays opt-in
                 pass

@@ -182,26 +182,6 @@ def test_no_route_or_consumer_cycle_starts_a_spark_job(server, monkeypatch):
     assert sorted(server.service.cache.deletes) == ["14", "5"]
 
 
-def test_keep_alive_responses_do_not_wait_for_delayed_ack(server):
-    """Headers and body go out as two writes; with Nagle on, each body
-    waited ~40 ms for the client's delayed ACK, so 20 requests on one
-    keep-alive connection took over 0.8 s."""
-    import http.client
-    import time
-
-    conn = http.client.HTTPConnection("127.0.0.1", server.port)
-    try:
-        t0 = time.monotonic()
-        for i in range(20):
-            conn.request("PUT", "/api/v1/sinners/update/14", json.dumps({"name": f"n{i}"}))
-            resp = conn.getresponse()
-            assert resp.status == 200
-            resp.read()
-        assert time.monotonic() - t0 < 0.4
-    finally:
-        conn.close()
-
-
 def test_quarantine_reader_tolerates_missing_dir(spark, tmp_path):
     """Clean pipelines never create the quarantine dir; read_quarantine
     must return an empty typed frame, not raise (ADVICE r3)."""
