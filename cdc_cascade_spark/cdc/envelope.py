@@ -13,13 +13,9 @@ input (columns ``key``, ``value``, ``partition``, ``offset``, ...):
 
 Works identically on batch DataFrames and streaming DataFrames — the
 streaming layer (cdc_cascade_spark.streaming) reuses these unchanged.
-``invalidation_key`` is the driver-side twin of A4-A8 for one record
-value, for a consumer that already holds its batch in driver memory.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -85,26 +81,6 @@ def invalidation_keys(payloads: DataFrame, key_field: str = "code") -> DataFrame
     return payloads.filter(F.col(f"before.{key_field}").isNotNull()).select(
         F.col(f"before.{key_field}").alias(key_field)
     )
-
-
-def invalidation_key(value: str | None, key_field: str = "code"):
-    """The key one record value invalidates, decoded on the driver.
-
-    Same rule as :func:`invalidation_keys`: only a non-null
-    ``before.<key_field>`` invalidates. Tombstones (``None``) and corrupt
-    values (not JSON, or no ``payload`` object) yield ``None``, as
-    :func:`parse_envelope` routes them away from :func:`valid_events`.
-    Like the reference (cdc.go:57-59), only the key is decoded. Spark's
-    reader is laxer (single quotes, bytes after the object) and nulls a
-    key of the wrong type; the service's own envelopes have none of these.
-    """
-    try:
-        envelope = json.loads(value) if value is not None else None
-    except ValueError:
-        return None
-    payload = envelope.get("payload") if isinstance(envelope, dict) else None
-    before = payload.get("before") if isinstance(payload, dict) else None
-    return before.get(key_field) if isinstance(before, dict) else None
 
 
 def route_by_table(

@@ -70,16 +70,10 @@ from pyspark.sql import DataFrame, SparkSession
 CHECK_WINDOW = 50
 
 CHECK_FIRST: list[str] = [
-    # Every query whose fingerprint closure changed since the committed
-    # manifest (cdc/envelope.py gained the driver-side
-    # ``invalidation_key``), plus every frozen query whose last green
-    # row is 3+ reports old (r15, against CORRECTNESS_r18). The r18
-    # pins are all green in CORRECTNESS_r18 and rotated out.
-    # -- changed closure: cdc/envelope.py --
-    "cdc_latest_state",
-    "cdc_invalidation_summary",
-    "cdc_op_routing",
-    "cdc_scd2_history",
+    # Every frozen query whose last green row is 3+ reports old (r15,
+    # against CORRECTNESS_r18); no fingerprint closure changed since the
+    # committed manifest. The r18 pins are all green in CORRECTNESS_r18
+    # and rotated out.
     # -- over the staleness budget (last green r15) --
     "packing_efficiency",
     "q05_order_priority_semi",
@@ -97,7 +91,7 @@ CHECK_FIRST: list[str] = [
 # 50 they lose their row, which is acceptable) — use ONLY for
 # fingerprint-frozen queries whose sole need is a fresher green row,
 # never for changed or new code. Here: every other frozen query whose
-# last green row is r16, the oldest cohort left (12 + 35 = 47, inside
+# last green row is r16, the oldest cohort left (8 + 35 = 43, inside
 # the window with margin). The r18 CHECK_NEXT entries got their rows.
 CHECK_NEXT: list[str] = [
     "q03_supplier_volume",

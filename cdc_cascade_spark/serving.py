@@ -28,11 +28,12 @@ handler). Reads (B2, B3 and B4/B5's read-modify-write) go to a
 **materialized current-state view maintained per append** — the same
 latest-wins upsert semantics as ``upsert_view_batch``
 (streaming/sinks.py), applied incrementally at the ingest boundary —
-so no read recompacts the changelog. The consumer cycle decodes the
-envelopes the driver already holds (``invalidation_key``), so no
-serving call starts a Spark job. ``changelog()`` exposes the log as a
-DataFrame; latest-wins compaction of it (cdc/compaction.py) is the
-consistency oracle for the view (pinned by tests).
+so no read recompacts the changelog and no read starts a Spark job.
+The consumer cycle still decodes its envelopes with the Spark path
+(``parse_envelope`` → ``valid_events`` → ``invalidation_keys``).
+``changelog()`` exposes the log as a DataFrame; latest-wins compaction
+of it (cdc/compaction.py) is the consistency oracle for the view
+(pinned by tests).
 """
 
 from __future__ import annotations
@@ -43,11 +44,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cdc_cascade_spark.cdc.envelope import invalidation_key
+from cdc_cascade_spark.cdc.envelope import (
+    invalidation_keys,
+    parse_envelope,
+    valid_events,
+)
 from cdc_cascade_spark.cdc.schemas import SINNERS_SCHEMA
-from cdc_cascade_spark.streaming.sinks import KeyValueStore
-# Re-exported, unused here: perfbench's traced run patches it by name.
-from cdc_cascade_spark.streaming.sinks import invalidate_batch  # noqa: F401
+from cdc_cascade_spark.streaming.sinks import KeyValueStore, invalidate_batch
 
 
 class NotFound(KeyError):
@@ -174,15 +177,19 @@ class CdcTableService:
         """Consume new envelopes and DEL invalidated keys (the cascade).
 
         Mirrors one poll iteration of the reference consumer: only
-        events with a ``before`` image invalidate, and each distinct key
-        is DEL'd once; the offset advances after the sink effect
-        (at-least-once; DEL is idempotent). The end offset is taken
-        first, so an envelope appended while the DELs run is left for
-        the next cycle. Returns the number of envelopes consumed.
+        events with a ``before`` image invalidate; offsets advance after
+        the sink effect (at-least-once; DEL is idempotent). The end
+        offset is taken first, so an envelope appended while the DELs
+        run is left for the next cycle. Returns the number of envelopes
+        consumed.
         """
         end = len(self._log)
         new = self._log[self._consumed : end]
-        for key in {invalidation_key(v, self.key_field) for v in new} - {None}:
-            self.cache.delete(str(key))
+        if not new:
+            return 0
+        df = self.spark.createDataFrame([(v,) for v in new], "value string")
+        payloads = valid_events(parse_envelope(df, self.table_schema))
+        keys = invalidation_keys(payloads, self.key_field)
+        invalidate_batch(self.cache, keys, self.key_field)
         self._consumed = end
         return len(new)

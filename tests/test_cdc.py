@@ -16,13 +16,11 @@ from __future__ import annotations
 import json
 
 import pytest
-from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from cdc_cascade_spark.cdc.compaction import current_state, latest_wins
 from cdc_cascade_spark.cdc.envelope import (
     dead_letter,
-    invalidation_key,
     invalidation_keys,
     op_routed,
     parse_envelope,
@@ -82,47 +80,6 @@ def test_invalidation_keys_match_reference(raw_stream):
     payloads = valid_events(parse_envelope(raw_stream))
     keys = sorted(r.code for r in invalidation_keys(payloads).collect())
     assert keys == [5, 14]
-
-
-def _is_json(text: str) -> bool:
-    try:
-        json.loads(text)
-    except ValueError:
-        return False
-    return True
-
-
-_image = st.builds(_row, st.integers(0, 30), st.sampled_from(["a", "b"]))
-_lsn = st.integers(1, 99)
-_well_formed = st.one_of(
-    st.builds(lambda a, lsn: _env("c", None, a, lsn), _image, _lsn),
-    st.builds(lambda b, a, lsn: _env("u", b, a, lsn), _image, _image, _lsn),
-    st.builds(lambda b, lsn: _env("d", b, None, lsn), _image, _lsn),
-)
-_scalar = st.one_of(st.none(), st.integers(), st.text(max_size=6))
-_record_value = st.one_of(
-    _well_formed,
-    st.none(),  # tombstone
-    st.text(max_size=12).filter(lambda t: not _is_json(t)),
-    _well_formed.flatmap(lambda v: st.integers(0, len(v) - 1).map(lambda n: v[:n])),
-    st.dictionaries(  # JSON without a payload
-        st.text(max_size=8).filter(lambda k: k.lower() != "payload"),
-        _scalar, max_size=3).map(json.dumps),
-    _scalar.map(lambda x: json.dumps({"payload": x})),  # payload not an object
-)
-
-
-@settings(max_examples=10, deadline=None)
-@example(values=[_env("d", _row(14, "Deren"), None, 5), None, "{not valid json"])
-@given(values=st.lists(_record_value, max_size=8))
-def test_driver_invalidation_key_matches_spark_path(spark, values):
-    """The driver decode DELs exactly the keys the Spark consumer path
-    (parse_envelope → valid_events → invalidation_keys) does."""
-    df = spark.createDataFrame([(v,) for v in values], "value string")
-    spark_keys = {str(r.code) for r in
-                  invalidation_keys(valid_events(parse_envelope(df))).collect()}
-    driver_keys = {str(k) for k in map(invalidation_key, values) if k is not None}
-    assert driver_keys == spark_keys
 
 
 def test_op_routing(raw_stream):
