@@ -12,7 +12,8 @@ controllers/controllers.go:24-119 status codes) on the Python stdlib
 
 No route touches Spark: every one is served from the service's
 maintained materialized view + cache-aside KV, so the HTTP layer stays
-driver-thread-cheap.
+driver-thread-cheap. Handlers hold no lock (the service owns its own),
+so an unread ``GET /read`` stalls only its own connection.
 
 Shutdown follows the reference's signal choreography (main.go:21-68):
 SIGINT/SIGTERM → stop accepting HTTP (bounded 5 s) → wait for the
@@ -49,7 +50,9 @@ class CdcApiServer:
         if port is None:
             port = int(os.environ.get("API_PORT", "8080"))
         self.service = service
-        self._lock = threading.Lock()  # serialize service mutations
+        # perfbench's api_cache_aside consumer holds this around each
+        # cycle; it is the service's own re-entrant lock.
+        self._lock = service._lock
         api = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -104,7 +107,10 @@ class CdcApiServer:
 
             def _body(self) -> dict:
                 n = int(self.headers.get("Content-Length") or 0)
-                return json.loads(self.rfile.read(n) or b"{}")
+                body = json.loads(self.rfile.read(n) or b"{}")
+                if not isinstance(body, dict):
+                    raise ValueError("body must be a JSON object")
+                return body
 
             def _dispatch(self, method: str) -> None:
                 m = _ROUTE.match(self.path)
@@ -113,22 +119,21 @@ class CdcApiServer:
                     return
                 action, code = m.groups()
                 try:
-                    with api._lock:
-                        if method == "POST" and action == "create" and code is None:
-                            self._send(201, api.service.create(self._body()))
-                        elif method == "GET" and action == "read" and code is None:
-                            self._send_json_stream(api.service.read_all())
-                        elif method == "GET" and action == "read":
-                            self._send(200, api.service.read_one(code))
-                        elif method == "PUT" and action == "update" and code:
-                            self._send(200, api.service.update(code, self._body()))
-                        elif method == "DELETE" and action == "delete" and code:
-                            self._send(200, api.service.delete(code))
-                        else:
-                            self._send(404, "Not Found")
+                    if method == "POST" and action == "create" and code is None:
+                        self._send(201, api.service.create(self._body()))
+                    elif method == "GET" and action == "read" and code is None:
+                        self._send_json_stream(api.service.read_all())
+                    elif method == "GET" and action == "read":
+                        self._send(200, api.service.read_one(code))
+                    elif method == "PUT" and action == "update" and code:
+                        self._send(200, api.service.update(code, self._body()))
+                    elif method == "DELETE" and action == "delete" and code:
+                        self._send(200, api.service.delete(code))
+                    else:
+                        self._send(404, "Not Found")
                 except NotFound:
                     self._send(404, "Not Found")  # controllers.go:64
-                except (ValueError, KeyError, json.JSONDecodeError) as e:
+                except (ValueError, KeyError, TypeError) as e:  # TypeError: a null key
                     self._send(400, str(e))  # controllers.go:27,53,80
 
             def do_GET(self):

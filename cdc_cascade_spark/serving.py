@@ -22,6 +22,10 @@ surface engine-natively:
   CDC consumer's role (queue/cdc.go:154-224) over not-yet-consumed
   envelopes.
 
+One re-entrant lock, owned here, guards the log, LSN and view: callers
+need none, and a miss's fill cannot land after a newer write's DEL.
+The log holds only pending envelopes; a cycle drops those it DEL'd.
+
 Scale note: the changelog append path is driver-side by design (it
 models the *ingest boundary*, one event at a time, like an HTTP
 handler). Reads (B2, B3 and B4/B5's read-modify-write) go to a
@@ -31,14 +35,16 @@ latest-wins upsert semantics as ``upsert_view_batch``
 so no read recompacts the changelog and no read starts a Spark job.
 The consumer cycle still decodes its envelopes with the Spark path
 (``parse_envelope`` → ``valid_events`` → ``invalidation_keys``).
-``changelog()`` exposes the log as a DataFrame; latest-wins compaction
-of it (cdc/compaction.py) is the consistency oracle for the view
-(pinned by tests).
+``changelog()`` exposes the pending envelopes as a DataFrame; before
+any cycle runs that is the whole log, and its latest-wins compaction
+(cdc/compaction.py) is the consistency oracle for the view (pinned by
+tests).
 """
 
 from __future__ import annotations
 
 import json
+import threading
 from datetime import datetime, timezone
 from typing import Any
 
@@ -71,9 +77,9 @@ class CdcTableService:
         self.cache = cache
         self.table_schema = table_schema
         self.key_field = key_field
-        self._log: list[str] = []  # envelope JSON values, LSN-ordered
+        self._lock = threading.RLock()  # re-entrant: a KV call may call back
+        self._log: list[str] = []  # pending envelope JSON values, LSN-ordered
         self._lsn = 0
-        self._consumed = 0  # consumer offset (A10 analog)
         # Materialized latest-row view, maintained per append (the
         # incremental form of upsert_view_batch): point reads hit this,
         # never a changelog recompaction.
@@ -112,8 +118,9 @@ class CdcTableService:
         )
 
     def changelog(self) -> DataFrame:
-        """The envelope log as a Kafka-shaped ``value`` column."""
-        return self.spark.createDataFrame([(v,) for v in self._log], "value string")
+        """The envelopes not yet consumed, as a Kafka-shaped ``value`` column."""
+        with self._lock:
+            return self.spark.createDataFrame([(v,) for v in self._log], "value string")
 
     # -- B2/B3 reads -------------------------------------------------------
 
@@ -122,7 +129,8 @@ class CdcTableService:
         the table schema's field order (a missing field is null) — the
         rows latest-wins compaction of ``changelog()`` yields."""
         fields = self.table_schema.fieldNames()
-        return [{f: self._view[k].get(f) for f in fields} for k in sorted(self._view)]
+        with self._lock:
+            return [{f: self._view[k].get(f) for f in fields} for k in sorted(self._view)]
 
     def read_one(self, key: Any) -> dict:
         """Cache-aside point lookup (B3): hit → cached JSON; miss →
@@ -131,36 +139,36 @@ class CdcTableService:
         cached = self.cache.get(str(key))
         if cached is not None:
             return json.loads(cached)
-        row = self._current_row(key)
-        self.cache.set(str(key), json.dumps(row))  # TTL 0 → never expires
+        with self._lock:
+            row = self._current_row(key)
+            self.cache.set(str(key), json.dumps(row))  # TTL 0 → never expires
         return row
 
     # -- B1/B4/B5 writes (never touch the cache) ---------------------------
 
     def create(self, row: dict) -> dict:
         key = int(row[self.key_field])
-        try:
-            self.read_one(key)
-        except NotFound:
-            pass
-        else:
-            raise ValueError(f"duplicate key {key}")
         now = self._now()
         full = {"created_at": now, "updated_at": now, **row}
-        self._append("c", None, full)
+        with self._lock:  # the table's primary key decides (init.sql:4)
+            if key in self._view:
+                raise ValueError(f"duplicate key {key}")
+            self._append("c", None, full)
         return full
 
     def update(self, key: Any, changes: dict) -> dict:
         key = int(key)
-        before = self._current_row(key)
-        after = {**before, **changes, "updated_at": self._now()}  # C6 trigger
-        self._append("u", before, after)
+        with self._lock:
+            before = self._current_row(key)
+            after = {**before, **changes, "updated_at": self._now()}  # C6 trigger
+            self._append("u", before, after)
         return after
 
     def delete(self, key: Any) -> dict:
         key = int(key)
-        before = self._current_row(key)
-        self._append("d", before, None)
+        with self._lock:
+            before = self._current_row(key)
+            self._append("d", before, None)
         return before
 
     def _current_row(self, key: int) -> dict:
@@ -178,18 +186,18 @@ class CdcTableService:
 
         Mirrors one poll iteration of the reference consumer: only
         events with a ``before`` image invalidate; offsets advance after
-        the sink effect (at-least-once; DEL is idempotent). The end
-        offset is taken first, so an envelope appended while the DELs
-        run is left for the next cycle. Returns the number of envelopes
-        consumed.
+        the sink effect (at-least-once; DEL is idempotent), so a cycle
+        whose DELs raise leaves its envelopes in the log. The end offset
+        is taken first, so an envelope appended while the DELs run is
+        left for the next cycle. Returns the number of envelopes consumed.
         """
-        end = len(self._log)
-        new = self._log[self._consumed : end]
-        if not new:
-            return 0
-        df = self.spark.createDataFrame([(v,) for v in new], "value string")
-        payloads = valid_events(parse_envelope(df, self.table_schema))
-        keys = invalidation_keys(payloads, self.key_field)
-        invalidate_batch(self.cache, keys, self.key_field)
-        self._consumed = end
-        return len(new)
+        with self._lock:
+            n = len(self._log)
+            if not n:
+                return 0
+            df = self.spark.createDataFrame([(v,) for v in self._log], "value string")
+            payloads = valid_events(parse_envelope(df, self.table_schema))
+            keys = invalidation_keys(payloads, self.key_field)
+            invalidate_batch(self.cache, keys, self.key_field)
+            del self._log[:n]
+            return n

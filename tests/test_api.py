@@ -4,6 +4,8 @@
 from __future__ import annotations
 
 import json
+import socket
+import time
 import urllib.error
 import urllib.request
 
@@ -23,12 +25,12 @@ def server(spark):
     srv.shutdown_with_timeout()
 
 
-def _req(srv, method, path, body=None):
+def _req(srv, method, path, body=None, timeout=30.0):
     url = f"http://127.0.0.1:{srv.port}{path}"
     data = json.dumps(body).encode() if body is not None else None
     req = urllib.request.Request(url, data=data, method=method)
     try:
-        with urllib.request.urlopen(req) as resp:
+        with urllib.request.urlopen(req, timeout=timeout) as resp:
             return resp.status, json.loads(resp.read() or b"null")
     except urllib.error.HTTPError as e:
         return e.code, e.read().decode()
@@ -70,6 +72,51 @@ def test_http_error_codes_match_reference(server):
     assert st == 400  # duplicate key (controllers.go:32)
     st, _ = _req(server, "GET", "/api/v1/nope")
     assert st == 404
+
+
+def test_recreate_of_a_deleted_key_still_cached_returns_201(server):
+    """Create's duplicate check reads the table, not the cache
+    (init.sql:4): a deleted row that stays cached until the next cycle
+    does not block re-creating its key."""
+    assert _req(server, "GET", "/api/v1/sinners/read/14")[0] == 200  # cached
+    assert _req(server, "DELETE", "/api/v1/sinners/delete/14")[0] == 200
+    st, row = _req(server, "POST", "/api/v1/sinners/create",
+                   {"code": 14, "name": "Reborn", "class": "A"})
+    assert st == 201 and row["name"] == "Reborn"
+    server.service.run_invalidation_cycle()
+    assert _req(server, "GET", "/api/v1/sinners/read/14")[1]["name"] == "Reborn"
+
+
+@pytest.mark.parametrize("method,path,body", [
+    ("POST", "/api/v1/sinners/create", []),
+    ("POST", "/api/v1/sinners/create", {"code": None}),
+    ("PUT", "/api/v1/sinners/update/14", []),
+    ("PUT", "/api/v1/sinners/update/14", "s"),
+])
+def test_malformed_body_gets_400(server, method, path, body):
+    """A body that is not a JSON object, or a null key, is a 400
+    (controllers.go:27,80), not a dropped connection."""
+    assert _req(server, method, path, body)[0] == 400
+    assert _req(server, "GET", "/api/v1/sinners/read/14")[0] == 200
+
+
+def test_unread_full_scan_does_not_block_other_requests(server):
+    """Handlers hold no lock while they write: a client that asks for
+    the full scan and never reads it stalls only its own connection
+    once the socket buffers are full."""
+    assert server._lock is server.service._lock
+    name = "x" * 4096
+    for code in range(100, 4100):  # a ~16 MB body, past both socket buffers
+        server.service.create({"code": code, "name": name, "class": "A"})
+    stalled = socket.socket()
+    stalled.setsockopt(socket.SOL_SOCKET, socket.SO_RCVBUF, 65536)
+    try:
+        stalled.connect(("127.0.0.1", server.port))
+        stalled.sendall(b"GET /api/v1/sinners/read HTTP/1.1\r\nHost: t\r\n\r\n")
+        time.sleep(1.0)  # the scan's writer fills the buffers and blocks
+        assert _req(server, "GET", "/api/v1/sinners/read/100", timeout=3.0)[0] == 200
+    finally:
+        stalled.close()
 
 
 def test_signal_handler_runs_bounded_shutdown(spark, monkeypatch):

@@ -5,6 +5,9 @@ verification script (README.md:119-154).
 
 from __future__ import annotations
 
+import json
+import threading
+
 import pytest
 from hypothesis import example, given, settings, strategies as st
 
@@ -170,3 +173,63 @@ def test_cycle_dels_envelopes_appended_during_its_dels(spark):
     assert svc.run_invalidation_cycle() == 1
     assert svc.cache.deletes == ["14", "17"]
     assert svc.read_one(17)["name"] == "during-cycle"
+
+
+def test_cycle_drops_the_envelopes_it_consumed(svc):
+    """The log keeps only envelopes no cycle has consumed yet."""
+    svc.run_invalidation_cycle()
+    assert svc.changelog().count() == 0
+    svc.update(14, {"name": "X"})
+    (value,) = [r.value for r in svc.changelog().collect()]
+    assert json.loads(value)["payload"]["op"] == "u"
+
+
+def test_cycle_whose_dels_raise_keeps_its_envelopes(spark):
+    """At-least-once: a cycle that fails in its DELs consumes nothing,
+    and the next cycle DELs the key."""
+
+    class FailOnce(InMemoryKVStore):
+        failed = False
+
+        def delete(self, key: str) -> None:
+            if not self.failed:
+                self.failed = True
+                raise ConnectionError("kv down")
+            super().delete(key)
+
+    svc = _seeded(spark, FailOnce())
+    svc.read_one(14)  # cache 14
+    svc.update(14, {"name": "X"})
+    with pytest.raises(ConnectionError):
+        svc.run_invalidation_cycle()
+    assert svc.changelog().count() == 3
+    assert svc.run_invalidation_cycle() == 3
+    assert svc.cache.deletes == ["14"]
+    assert svc.read_one(14)["name"] == "X"
+
+
+def test_fill_cannot_land_after_a_newer_writes_del(spark):
+    """Race 2, with no lock outside the service: while a reader fills the
+    cache after a miss, an update and a cycle try to run. The update
+    must wait for the fill, so its cycle DELs the filled row; a fill
+    landing after the DEL would stay cached forever (TTL 0)."""
+    writers: list[threading.Thread] = []
+
+    class UpdateDuringFill(InMemoryKVStore):
+        def set(self, key: str, value: str) -> None:
+            if not writers:
+                t = threading.Thread(target=svc.update, args=(14, {"name": "new"}),
+                                     daemon=True)
+                writers.append(t)
+                t.start()
+                t.join(1.0)
+                if not t.is_alive():
+                    svc.run_invalidation_cycle()
+            super().set(key, value)
+
+    svc = _seeded(spark, UpdateDuringFill())
+    assert svc.read_one(14)["name"] == "Deren"
+    writers[0].join(10.0)
+    assert not writers[0].is_alive()
+    svc.run_invalidation_cycle()
+    assert svc.read_one(14)["name"] == "new"
