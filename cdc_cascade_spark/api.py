@@ -59,6 +59,14 @@ class CdcApiServer:
             # HTTP/1.1 enables chunked transfer for the streamed full
             # scan; every other response carries Content-Length.
             protocol_version = "HTTP/1.1"
+            # A connection that stalls a read or a write this long is
+            # dropped, so a client that never reads cannot pin a handler
+            # thread and its row copy. sendall's timeout bounds the whole
+            # call; the chunked writer keeps each call near 32 KiB. The
+            # value must sit far above any idle gap of a live keep-alive
+            # client, which http.client does not reconnect after a drop
+            # (perfbench's client idles about 1 s at most).
+            timeout = 60.0
 
             def log_message(self, fmt, *args):  # B7 logging stays opt-in
                 pass

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from cdc_cascade_spark.cdc.envelope import (
+    dead_letter,
     invalidation_keys,
     parse_envelope,
     valid_events,
@@ -34,7 +35,6 @@ from cdc_cascade_spark.streaming.sinks import (
     KeyValueStore,
     invalidate_batch,
     upsert_view_batch,
-    upsert_view_batch_partitions,
 )
 
 # Kafka/Debezium wiring constants from the reference deployment.
@@ -130,7 +130,6 @@ def start_invalidation_pipeline(
     checkpoint_dir: str,
     table_schema: T.StructType = SINNERS_SCHEMA,
     key_field: str = "code",
-    dead_letters: list[str] | None = None,
     quarantine_dir: str | None = None,
 ) -> StreamingQuery:
     """The flagship pipeline: CDC events → cache invalidation (A1-A10).
@@ -145,24 +144,16 @@ def start_invalidation_pipeline(
     accumulation) — so the quarantine directory may not exist at all;
     read it through :func:`read_quarantine`, which returns an empty
     frame for a never-written path instead of raising.
-    ``dead_letters`` is the in-process collector variant for small test
-    batches ONLY — it collects every malformed value through the driver
-    each batch, which is exactly the bounded-state rule production
-    pipelines must not break; deployments use ``quarantine_dir``.
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         parsed = parse_envelope(batch_df, table_schema)
-        if dead_letters is not None or quarantine_dir is not None:
-            from cdc_cascade_spark.cdc.envelope import dead_letter
-
+        if quarantine_dir is not None:
             dead = dead_letter(parsed)
-            if quarantine_dir is not None and not dead.isEmpty():
+            if not dead.isEmpty():
                 dead.write.mode("overwrite").parquet(
                     f"{quarantine_dir}/batch_id={batch_id}"
                 )
-            if dead_letters is not None:
-                dead_letters.extend(r.raw_value for r in dead.collect())
         payloads = valid_events(parsed)
         invalidate_batch(store, invalidation_keys(payloads, key_field), key_field)
 
@@ -194,32 +185,22 @@ def read_quarantine(spark: SparkSession, quarantine_dir: str) -> DataFrame:
 
 def start_materialized_view_pipeline(
     stream: DataFrame,
-    store: KeyValueStore | None,
+    store: KeyValueStore,
     checkpoint_dir: str,
     table_schema: T.StructType = SINNERS_SCHEMA,
     key_field: str = "code",
-    store_factory=None,
 ) -> StreamingQuery:
     """Maintained latest-row view: upsert on c/u/r, delete on d.
 
     The pure-Spark analog of the reference's cache-aside rebuild
     (sequence-flows.mmd:45-53) — instead of invalidate-then-miss, the
-    view converges to the compacted table state.
-
-    Pass ``store`` for the driver-side sink (bounded by
-    ``maxOffsetsPerTrigger``), or ``store_factory`` (picklable, one
-    client per executor partition) to write row images executor-side —
-    the hot-topic path where no payload flows through the driver.
+    view converges to the compacted table state. The sink runs on the
+    driver, bounded by the source's per-trigger cap.
     """
-    if (store is None) == (store_factory is None):
-        raise ValueError("pass exactly one of store / store_factory")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         payloads = valid_events(parse_envelope(batch_df, table_schema))
-        if store_factory is not None:
-            upsert_view_batch_partitions(store_factory, payloads, key_field)
-        else:
-            upsert_view_batch(store, payloads, key_field)
+        upsert_view_batch(store, payloads, key_field)
 
     return (
         stream.writeStream.foreachBatch(process_batch)

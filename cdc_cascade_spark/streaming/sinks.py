@@ -10,12 +10,10 @@ may be re-delivered after a crash, and the sink must tolerate replay.
 backs tests. A real Redis client drops in behind the same protocol
 (import-gated — the redis package is not in this environment).
 
-Scale note: ``invalidate_batch`` pulls only the *distinct invalidation
-keys* of one micro-batch to the driver — bounded by
-``maxOffsetsPerTrigger`` (the analog of the reference's 100-record
-poll), never by table size. For very hot topics the loop moves into
-``foreachPartition`` with one client per executor partition; the logic
-is isolated here so that swap touches one function.
+Both sinks run on the driver: each pulls one compacted micro-batch,
+bounded by ``maxOffsetsPerTrigger`` / ``maxFilesPerTrigger`` (the
+analog of the reference's 100-record poll, cdc.go:124), never by table
+size.
 """
 
 from __future__ import annotations
@@ -25,6 +23,8 @@ from typing import Protocol
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from cdc_cascade_spark.cdc.compaction import latest_wins
 
 
 class KeyValueStore(Protocol):
@@ -117,34 +117,10 @@ def invalidate_batch(store: KeyValueStore, keys_df: DataFrame, key_col: str) -> 
     list is bounded by the trigger's flow control
     (``maxOffsetsPerTrigger`` / ``maxFilesPerTrigger`` — every source
     builder in streaming/pipeline.py sets one; a caller wiring a raw
-    uncapped source must keep that contract or use the partitions
-    variant), so one bounded collect per batch is the right driver
-    contract; hot topics that outgrow any driver-side store use
-    :func:`invalidate_batch_partitions`, where no key list flows
-    through the driver at all."""
+    uncapped source must keep that contract), so one bounded collect
+    per batch is the right driver contract."""
     for row in keys_df.select(key_col).distinct().collect():
         store.delete(str(row[key_col]))
-
-
-def invalidate_batch_partitions(
-    store_factory, keys_df: DataFrame, key_col: str
-) -> None:
-    """``foreachPartition`` variant of :func:`invalidate_batch` for hot
-    topics: each executor partition opens its own store client and DELs
-    its keys directly, so no key list flows through the driver at all.
-
-    ``store_factory`` must be picklable (it runs in executor workers) —
-    e.g. ``lambda: RedisStore()``, which reads the connection from env
-    vars on the executor. DEL stays idempotent, so executor task
-    retries are safe under the same at-least-once contract.
-    """
-
-    def per_partition(rows) -> None:
-        store = store_factory()
-        for row in rows:
-            store.delete(str(row[key_col]))
-
-    keys_df.select(key_col).distinct().foreachPartition(per_partition)
 
 
 class RedisStore:
@@ -198,23 +174,6 @@ class RedisStore:
         self._client.delete(key)
 
 
-def _latest_view_rows(batch_payloads: DataFrame, key_field: str) -> DataFrame:
-    """Compact one micro-batch to its latest row image per key:
-    (__key, op, after_json), latest-LSN-wins."""
-    from cdc_cascade_spark.cdc.compaction import latest_wins
-
-    keyed = batch_payloads.select(
-        F.coalesce(F.col(f"after.{key_field}"), F.col(f"before.{key_field}")).alias(
-            "__key"
-        ),
-        F.col("source.lsn").alias("__lsn"),
-        "op",
-        F.to_json("after").alias("after_json"),
-    )
-    latest = latest_wins(keyed, ["__key"], ["__lsn"], op_col="op", delete_op=None)
-    return latest.select("__key", "op", "after_json")
-
-
 def upsert_view_batch(
     store: KeyValueStore,
     batch_payloads: DataFrame,
@@ -226,36 +185,19 @@ def upsert_view_batch(
     row image directly instead of waiting for a read-through miss).
 
     Within a batch, latest-LSN-wins; deletes remove the key. Row images
-    stream through the driver — bounded by ``maxOffsetsPerTrigger``;
-    for hot topics use :func:`upsert_view_batch_partitions`.
+    stream through the driver, bounded by ``maxOffsetsPerTrigger``.
     """
-    for row in _latest_view_rows(batch_payloads, key_field).toLocalIterator():
+    keyed = batch_payloads.select(
+        F.coalesce(F.col(f"after.{key_field}"), F.col(f"before.{key_field}")).alias(
+            "__key"
+        ),
+        F.col("source.lsn").alias("__lsn"),
+        "op",
+        F.to_json("after").alias("after_json"),
+    )
+    latest = latest_wins(keyed, ["__key"], ["__lsn"], op_col="op", delete_op=None)
+    for row in latest.select("__key", "op", "after_json").toLocalIterator():
         if row["op"] == "d":
             store.delete(str(row["__key"]))
         else:
             store.set(str(row["__key"]), row["after_json"])
-
-
-def upsert_view_batch_partitions(
-    store_factory, batch_payloads: DataFrame, key_field: str
-) -> None:
-    """``foreachPartition`` variant of :func:`upsert_view_batch`: each
-    executor partition opens its own store client and writes its row
-    images directly, so no payload flows through the driver.
-
-    Safe without per-key partitioning: ``_latest_view_rows`` compacts
-    the batch to ONE row per key first, so no two partitions write the
-    same key. ``store_factory`` must be picklable (it runs in executor
-    workers). Replays rewrite the same final images (idempotent), the
-    same at-least-once contract as the driver-side variant.
-    """
-
-    def per_partition(rows) -> None:
-        store = store_factory()
-        for row in rows:
-            if row["op"] == "d":
-                store.delete(str(row["__key"]))
-            else:
-                store.set(str(row["__key"]), row["after_json"])
-
-    _latest_view_rows(batch_payloads, key_field).foreachPartition(per_partition)

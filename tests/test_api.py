@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import math
 import socket
 import time
 import urllib.error
@@ -117,6 +118,42 @@ def test_unread_full_scan_does_not_block_other_requests(server):
         assert _req(server, "GET", "/api/v1/sinners/read/100", timeout=3.0)[0] == 200
     finally:
         stalled.close()
+
+
+def test_stalled_full_scan_is_dropped_after_handler_timeout(server):
+    """A client that asks for the full scan and never reads is dropped
+    once the handler's write stalls past its socket timeout, instead of
+    pinning the handler thread until the client closes."""
+    handler = server._httpd.RequestHandlerClass
+    assert isinstance(handler.timeout, (int, float))
+    assert 30 <= handler.timeout < math.inf
+    handler.timeout = 0.5  # this server's own Handler class
+    name = "x" * 4096
+    for code in range(100, 4100):  # a ~16 MB body, past both socket buffers
+        server.service.create({"code": code, "name": name, "class": "A"})
+    stalled = socket.socket()
+    stalled.setsockopt(socket.SOL_SOCKET, socket.SO_RCVBUF, 65536)
+    got, closed = 0, False
+    try:
+        stalled.connect(("127.0.0.1", server.port))
+        stalled.sendall(b"GET /api/v1/sinners/read HTTP/1.1\r\nHost: t\r\n\r\n")
+        deadline = time.monotonic() + 5.0
+        time.sleep(1.5)  # the writer fills the buffers, blocks, times out
+        while not closed and time.monotonic() < deadline:
+            stalled.settimeout(max(deadline - time.monotonic(), 0.01))
+            try:
+                data = stalled.recv(65536)
+            except ConnectionResetError:
+                closed = True
+            except TimeoutError:
+                break
+            else:
+                closed = not data
+                got += len(data)
+    finally:
+        stalled.close()
+    assert closed, "server kept the stalled connection open"
+    assert got < 4000 * 4096, "the full body arrived before the drop"
 
 
 def test_signal_handler_runs_bounded_shutdown(spark, monkeypatch):

@@ -97,10 +97,11 @@ def test_sink_failure_replays_batch_and_converges(spark, tmp_path):
 
 
 def test_dead_letter_collector(spark, tmp_path):
-    """A6: malformed records are captured, not dropped; valid events
-    still process."""
+    """A6: malformed records are captured in the quarantine, not
+    dropped; valid events still process."""
     from cdc_cascade_spark.streaming.pipeline import (
         read_cdc_files,
+        read_quarantine,
         start_invalidation_pipeline,
     )
 
@@ -117,14 +118,16 @@ def test_dead_letter_collector(spark, tmp_path):
         + "\n"
     )
     store = InMemoryKVStore()
-    dl: list[str] = []
+    qdir = str(tmp_path / "quarantine")
     q = start_invalidation_pipeline(
         read_cdc_files(spark, str(src)), store, str(tmp_path / "ck"),
-        dead_letters=dl,
+        quarantine_dir=qdir,
     )
     q.processAllAvailable()
     q.stop()
-    assert dl == ["{broken json"]
+    assert [r.raw_value for r in read_quarantine(spark, qdir).collect()] == [
+        "{broken json"
+    ]
     assert sorted(store.deletes) == ["14", "5"]
 
 

@@ -11,16 +11,25 @@ from __future__ import annotations
 
 import json
 
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from cdc_cascade_spark.cdc.compaction import current_state
-from cdc_cascade_spark.cdc.envelope import parse_envelope, valid_events
+from cdc_cascade_spark.cdc.compaction import current_state, latest_wins
+from cdc_cascade_spark.cdc.envelope import (
+    invalidation_keys,
+    parse_envelope,
+    valid_events,
+)
 from cdc_cascade_spark.streaming.pipeline import (
     read_cdc_files,
     start_invalidation_pipeline,
     start_materialized_view_pipeline,
 )
-from cdc_cascade_spark.streaming.sinks import InMemoryKVStore
+from cdc_cascade_spark.streaming.sinks import (
+    InMemoryKVStore,
+    invalidate_batch,
+    upsert_view_batch,
+)
 from cdc_cascade_spark.streaming.windows import (
     hot_keys,
     session_counts,
@@ -283,36 +292,77 @@ def test_redis_store_protocol_with_stub_client():
     assert store.get("5") is None
 
 
-def test_invalidate_batch_partitions_executor_side(spark, tmp_path):
-    """foreachPartition invalidation: keys are DELed by executor-side
-    store clients — nothing iterates on the driver."""
-    import glob
-    import os
+@st.composite
+def _shuffled_crud_batch(draw):
+    """A CRUD history over a few keys, replayed per key in LSN order,
+    then shuffled into one micro-batch: returns (lines, final state)
+    where the state maps key -> name of its surviving row."""
+    steps = draw(st.lists(st.tuples(st.integers(1, 4), st.booleans()),
+                          min_size=1, max_size=20))
+    state: dict[str, str] = {}
+    lines = []
+    for lsn, (code, delete) in enumerate(steps, start=1):
+        before = _row(code, state[str(code)]) if str(code) in state else None
+        if before is not None and delete:
+            lines.append(_env("d", before, None, lsn))
+            del state[str(code)]
+        else:
+            state[str(code)] = f"n{lsn}"
+            op = "u" if before else "c"
+            lines.append(_env(op, before, _row(code, f"n{lsn}"), lsn))
+    return draw(st.permutations(lines)), state
 
-    from cdc_cascade_spark.streaming.sinks import invalidate_batch_partitions
 
-    outdir = str(tmp_path / "dels")
-    os.makedirs(outdir)
+class _RecordingStore(InMemoryKVStore):
+    """InMemoryKVStore that also logs the key of every SET."""
 
-    class FileStore:
-        """Executor-side stand-in: records DELs to a per-worker file."""
+    def __init__(self) -> None:
+        super().__init__()
+        self.sets: list[str] = []
 
-        def __init__(self, d):
-            self._path = os.path.join(d, f"w{os.getpid()}.log")
+    def set(self, key: str, value: str) -> None:
+        super().set(key, value)
+        self.sets.append(key)
 
-        def delete(self, key):
-            with open(self._path, "a") as f:
-                f.write(key + "\n")
 
-    keys = spark.createDataFrame(
-        [(k,) for k in ["5", "14", "5", "17"]], "code string"
-    ).repartition(4)
-    invalidate_batch_partitions(lambda: FileStore(outdir), keys, "code")
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_shuffled_crud_batch())
+def test_driver_sinks_apply_one_effect_per_key(spark, batch):
+    """Over a shuffled multi-partition batch, ``upsert_view_batch``
+    leaves the store byte-equal to the latest-wins compaction (keys
+    whose last op is a delete are absent) with exactly one SET or DEL
+    per key, and ``invalidate_batch`` DELs each key that has a before
+    image exactly once."""
+    lines, state = batch
+    raw = spark.createDataFrame([(v,) for v in lines], "value string").repartition(3)
+    payloads = valid_events(parse_envelope(raw))
 
-    deled = []
-    for path in glob.glob(outdir + "/*.log"):
-        deled += open(path).read().split()
-    assert sorted(deled) == ["14", "17", "5"]  # distinct keys, all applied
+    view = _RecordingStore()
+    upsert_view_batch(view, payloads, "code")
+    oracle = latest_wins(
+        payloads.select(
+            F.coalesce("after.code", "before.code").alias("k"),
+            F.col("source.lsn").alias("lsn"),
+            "op",
+            F.to_json("after").alias("after_json"),
+        ),
+        ["k"],
+        ["lsn"],
+    )
+    assert view.snapshot() == {str(r.k): r.after_json for r in oracle.collect()}
+    assert {k: json.loads(v)["name"] for k, v in view.snapshot().items()} == state
+    envs = [json.loads(v)["payload"] for v in lines]
+    touched = {str((e["after"] or e["before"])["code"]) for e in envs}
+    assert sorted(view.sets + view.deletes) == sorted(touched)
+
+    invalidated = InMemoryKVStore()
+    invalidate_batch(invalidated, invalidation_keys(payloads, "code"), "code")
+    with_before = {str(e["before"]["code"]) for e in envs if e["before"]}
+    assert sorted(invalidated.deletes) == sorted(with_before)
 
 
 def test_read_cdc_kafka_fails_only_at_connector_boundary(spark, monkeypatch):
@@ -371,43 +421,6 @@ def test_continuous_rollup_converges_to_batch(spark, tmp_path):
         .collect()
     }
     assert got == want
-
-
-def test_upsert_view_batch_partitions_executor_side(spark, tmp_path):
-    """foreachPartition view maintenance: row images are written by
-    executor-side store clients — no payload iterates on the driver."""
-    import glob
-    import os
-
-    from cdc_cascade_spark.streaming.sinks import upsert_view_batch_partitions
-
-    outdir = str(tmp_path / "ops")
-    os.makedirs(outdir)
-
-    class FileStore:
-        """Executor-side stand-in: records SET/DEL to a per-worker file."""
-
-        def __init__(self, d):
-            self._path = os.path.join(d, f"w{os.getpid()}-{id(self)}.log")
-
-        def set(self, key, value):
-            with open(self._path, "a") as f:
-                f.write(f"SET {key} {json.loads(value)['name']}\n")
-
-        def delete(self, key):
-            with open(self._path, "a") as f:
-                f.write(f"DEL {key}\n")
-
-    lines = BATCH_1 + BATCH_2
-    raw = spark.createDataFrame([(v,) for v in lines if v], "value string")
-    payloads = valid_events(parse_envelope(raw))
-    upsert_view_batch_partitions(lambda: FileStore(outdir), payloads, "code")
-
-    ops = []
-    for path in glob.glob(outdir + "/*.log"):
-        ops += [l for l in open(path).read().splitlines() if l]
-    # one op per key (latest-wins compaction ran before the sink)
-    assert sorted(ops) == sorted(["SET 5 Aurelius", "SET 17 Shalom", "DEL 14"])
 
 
 # ---------------------------------------------------------------------------
@@ -499,56 +512,6 @@ def test_dedup_within_watermark_suppresses_redelivery(spark, tmp_path):
     q.stop()
     ids = sorted(r.event_id for r in spark.sql("SELECT * FROM deduped").collect())
     assert ids == [1, 2, 3]
-
-
-def test_materialized_view_pipeline_executor_side(spark, tmp_path):
-    """The full pipeline with store_factory writes the view from
-    executors and still converges to the batch-compacted state."""
-    import glob
-    import os
-
-    src = tmp_path / "src"
-    src.mkdir()
-    _write_batch(src, BATCH_1, "b1.txt")
-    _write_batch(src, BATCH_2, "b2.txt")
-    outdir = str(tmp_path / "view")
-    os.makedirs(outdir)
-
-    class FileStore:
-        def __init__(self, d):
-            self._d = d
-
-        def _write(self, op, key, payload=""):
-            path = os.path.join(self._d, f"w{os.getpid()}-{id(self)}.log")
-            with open(path, "a") as f:
-                f.write(f"{op} {key} {payload}\n")
-
-        def set(self, key, value):
-            self._write("SET", key, json.loads(value)["name"])
-
-        def delete(self, key):
-            self._write("DEL", key)
-
-    q = start_materialized_view_pipeline(
-        read_cdc_files(spark, str(src)),
-        store=None,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        store_factory=lambda: FileStore(outdir),
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    # replay the op log: last op per key wins (files are per-batch,
-    # per-worker; batches arrive in order within this single run)
-    state = {}
-    for path in sorted(glob.glob(outdir + "/*.log"), key=os.path.getmtime):
-        for line in open(path).read().splitlines():
-            parts = line.split(" ", 2)
-            if parts[0] == "SET":
-                state[parts[1]] = parts[2].strip()
-            else:
-                state.pop(parts[1], None)
-    assert state == {"5": "Aurelius", "17": "Shalom"}
 
 
 # ---------------------------------------------------------------------------
