@@ -27,6 +27,7 @@ import json
 import os
 import re
 import signal
+import sys
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -35,6 +36,15 @@ from cdc_cascade_spark.serving import CdcTableService, NotFound
 _ROUTE = re.compile(r"^/api/v1/sinners/(create|read|update|delete)(?:/([^/]+))?$")
 
 SHUTDOWN_TIMEOUT_SECS = 5.0  # main.go:52 ShutdownWithTimeout(5s), :66 After(5s)
+
+
+class _HTTPServer(ThreadingHTTPServer):
+    def handle_error(self, request, client_address):
+        # A client that reset, closed or stalled past Handler.timeout is
+        # routine for a long-lived server: drop it without a traceback.
+        if isinstance(sys.exc_info()[1], (ConnectionError, TimeoutError)):
+            return
+        super().handle_error(request, client_address)
 
 
 class CdcApiServer:
@@ -156,7 +166,7 @@ class CdcApiServer:
             def do_DELETE(self):
                 self._dispatch("DELETE")
 
-        self._httpd = ThreadingHTTPServer((host, port), Handler)
+        self._httpd = _HTTPServer((host, port), Handler)
         self._thread: threading.Thread | None = None
 
     @property

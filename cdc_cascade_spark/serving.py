@@ -66,17 +66,9 @@ class NotFound(KeyError):
 class CdcTableService:
     """Keyed table service backed by a CDC changelog + cache-aside KV."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        cache: KeyValueStore,
-        table_schema=SINNERS_SCHEMA,
-        key_field: str = "code",
-    ) -> None:
+    def __init__(self, spark: SparkSession, cache: KeyValueStore) -> None:
         self.spark = spark
         self.cache = cache
-        self.table_schema = table_schema
-        self.key_field = key_field
         self._lock = threading.RLock()  # re-entrant: a KV call may call back
         self._log: list[str] = []  # pending envelope JSON values, LSN-ordered
         self._lsn = 0
@@ -92,7 +84,7 @@ class CdcTableService:
 
     def _append(self, op: str, before: dict | None, after: dict | None) -> None:
         self._lsn += 1
-        key = int((after or before)[self.key_field])
+        key = int((after or before)["code"])
         if op == "d":
             self._view.pop(key, None)
         else:
@@ -126,9 +118,9 @@ class CdcTableService:
 
     def read_all(self) -> list[dict]:
         """Full scan (B2): current rows in key order, each projected onto
-        the table schema's field order (a missing field is null) — the
+        ``SINNERS_SCHEMA``'s field order (a missing field is null) — the
         rows latest-wins compaction of ``changelog()`` yields."""
-        fields = self.table_schema.fieldNames()
+        fields = SINNERS_SCHEMA.fieldNames()
         with self._lock:
             return [{f: self._view[k].get(f) for f in fields} for k in sorted(self._view)]
 
@@ -147,7 +139,7 @@ class CdcTableService:
     # -- B1/B4/B5 writes (never touch the cache) ---------------------------
 
     def create(self, row: dict) -> dict:
-        key = int(row[self.key_field])
+        key = int(row["code"])
         now = self._now()
         full = {"created_at": now, "updated_at": now, **row}
         with self._lock:  # the table's primary key decides (init.sql:4)
@@ -196,8 +188,8 @@ class CdcTableService:
             if not n:
                 return 0
             df = self.spark.createDataFrame([(v,) for v in self._log], "value string")
-            payloads = valid_events(parse_envelope(df, self.table_schema))
-            keys = invalidation_keys(payloads, self.key_field)
-            invalidate_batch(self.cache, keys, self.key_field)
+            payloads = valid_events(parse_envelope(df, SINNERS_SCHEMA))
+            keys = invalidation_keys(payloads, "code")
+            invalidate_batch(self.cache, keys, "code")
             del self._log[:n]
             return n

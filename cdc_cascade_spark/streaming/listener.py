@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import logging
 import time
+from collections import deque
 from collections.abc import Callable
 from typing import TypeVar
 
@@ -27,11 +28,16 @@ T = TypeVar("T")
 
 
 class LoggingQueryListener(StreamingQueryListener):
-    """Collects streaming lifecycle events (and logs them)."""
+    """Collects streaming lifecycle events (and logs them).
+
+    ``progressed`` keeps the newest 100 progress events, as Spark keeps
+    ``spark.sql.streaming.numRecentProgressUpdates`` (default 100), so a
+    long-lived query's listener stays bounded.
+    """
 
     def __init__(self) -> None:
         self.started: list[str] = []
-        self.progressed: list[dict] = []
+        self.progressed: deque[dict] = deque(maxlen=100)
         self.terminated: list[str] = []
 
     def onQueryStarted(self, event) -> None:

@@ -63,49 +63,6 @@ class InMemoryKVStore:
             return dict(self._data)
 
 
-class IdempotentBatchSink:
-    """Deduplicate replayed batch ids over an at-least-once channel.
-
-    ``foreachBatch`` may replay a batch after a crash (same batch_id).
-    Recording committed batch ids and skipping replays dedupes the
-    effect — the standard pattern when the effect itself is NOT
-    naturally idempotent (unlike the reference's Redis DEL, which is).
-
-    Pass ``store`` to persist committed ids *in the sink system* so the
-    skip survives a driver restart; without it the dedup is
-    single-process only. Even with a store, the effect and the
-    committed-id mark are two writes, not one transaction: a crash
-    between them re-applies that one batch on replay. True exactly-once
-    needs the mark written atomically with the effect (e.g. a Redis
-    MULTI or a transactional table) — ``apply`` gets the marker key via
-    ``mark_key`` so a transactional sink can do exactly that, and this
-    class then only short-circuits the already-committed fast path.
-    """
-
-    NAMESPACE = "__committed_batch__"
-
-    def __init__(self, apply, store: KeyValueStore | None = None) -> None:
-        self._apply = apply
-        self._store = store
-        self.committed: set[int] = set()
-        self.replays_skipped = 0
-
-    def mark_key(self, batch_id: int) -> str:
-        return f"{self.NAMESPACE}:{batch_id}"
-
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.committed or (
-            self._store is not None
-            and self._store.get(self.mark_key(batch_id)) is not None
-        ):
-            self.replays_skipped += 1
-            return
-        self._apply(batch_df, batch_id)
-        if self._store is not None:
-            self._store.set(self.mark_key(batch_id), "1")
-        self.committed.add(batch_id)
-
-
 def invalidate_batch(store: KeyValueStore, keys_df: DataFrame, key_col: str) -> None:
     """Apply one micro-batch of invalidations: DEL each distinct key.
 

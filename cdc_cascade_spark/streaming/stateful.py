@@ -5,17 +5,12 @@ The engine's streaming surface needs operators Spark doesn't ship:
 - ``first_seen_filter``: cross-batch streaming dedup — emit each key's
   first-ever event, suppress every later one. The keyed state is one
   marker per key; at 100 TB-of-stream the state store (RocksDB in prod
-  config) holds only key + flag, and a watermark-driven timeout can
-  bound retention where business rules allow.
+  config) holds only key + flag. Where business rules allow a key to
+  be forgotten, ``streaming/joins.py::dedup_within_watermark`` is the
+  bounded-state dedup.
 
 - ``running_counts``: per-key running event count with update-mode
   emission — the minimal template for custom aggregating state.
-
-- ``first_seen_filter_tws``: the same dedup on Spark 4's
-  ``transformWithStateInPandas`` state API (StatefulProcessor), with
-  optional state TTL — the current-generation surface for custom
-  state, where retention is a first-class state-store property instead
-  of hand-rolled timeout logic.
 
 All are Arrow-batched (pandas in/out) per the engine's UDF policy:
 Python only where built-in operators genuinely can't express the
@@ -62,65 +57,6 @@ def first_seen_filter(
         stateStructType="seen boolean",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def first_seen_filter_tws(
-    events: DataFrame,
-    key_col: str,
-    out_cols: list[str],
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """Streaming dedup on the Spark 4 state API
-    (``transformWithStateInPandas`` + StatefulProcessor).
-
-    Same semantics as :func:`first_seen_filter`; ``ttl_ms`` bounds how
-    long a key's seen-marker is retained — after expiry the key can be
-    emitted again, which is the standard retention trade for unbounded
-    key spaces (the state store stays O(live keys), not O(all keys
-    ever)). TTL here is a state-store property (``getValueState``'s
-    ``ttlDurationMs``), not hand-rolled timer logic.
-
-    Environment note: the transformWithState Python driver worker
-    requires ``google.protobuf`` (its state channel is protobuf-framed),
-    which is not installed in this container — the operator is
-    implemented and its test runs wherever protobuf is present
-    (pytest skips otherwise, mirroring the decode_media gating).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    schema = ", ".join(f"{c} {t}" for c, t in events.select(out_cols).dtypes)
-
-    class FirstSeen(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState(
-                "seen", "seen boolean", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._seen.exists():
-                return iter(())
-            heads = [
-                pdf.sort_values(out_cols).head(1)[out_cols]
-                for pdf in rows
-                if len(pdf)
-            ]
-            if not heads:
-                return iter(())
-            self._seen.update((True,))
-            return iter([pd.concat(heads).sort_values(out_cols).head(1)])
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        FirstSeen(),
-        outputStructType=schema,
-        outputMode="Append",
-        timeMode="None",
     )
 
 

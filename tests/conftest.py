@@ -42,7 +42,7 @@ def replayed_rows():
         return [
             {k: v.strftime("%Y-%m-%dT%H:%M:%S") if isinstance(v, datetime) else v
              for k, v in r.asDict().items()}
-            for r in df.orderBy(service.key_field).collect()
+            for r in df.orderBy("code").collect()
         ]
 
     return replay

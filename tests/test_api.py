@@ -156,6 +156,28 @@ def test_stalled_full_scan_is_dropped_after_handler_timeout(server):
     assert got < 4000 * 4096, "the full body arrived before the drop"
 
 
+def test_client_disconnects_print_no_traceback(spark, capsys):
+    """A client that resets or stalls is routine: the server drops it
+    quietly, while any other handler error still prints its traceback.
+    The server is never started, and no client connects."""
+    srv = CdcApiServer(CdcTableService(spark, InMemoryKVStore()), port=0)
+    try:
+        for exc in (ConnectionResetError, BrokenPipeError, TimeoutError):
+            try:
+                raise exc("client went away")
+            except exc:
+                srv._httpd.handle_error(None, ("127.0.0.1", 0))
+        assert capsys.readouterr().err == ""
+        try:
+            raise RuntimeError("handler bug")
+        except RuntimeError:
+            srv._httpd.handle_error(None, ("127.0.0.1", 0))
+        err = capsys.readouterr().err
+        assert "Traceback" in err and "RuntimeError: handler bug" in err
+    finally:
+        srv._httpd.server_close()
+
+
 def test_signal_handler_runs_bounded_shutdown(spark, monkeypatch):
     import os as _os
     import signal as _signal

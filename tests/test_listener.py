@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import time
+from types import SimpleNamespace
 
 import pytest
 
@@ -34,6 +35,16 @@ def test_listener_records_lifecycle(spark, tmp_path):
         assert qid in listener.terminated
     finally:
         spark.streams.removeListener(listener)
+
+
+def test_listener_keeps_only_recent_progress():
+    """A long-lived query's listener keeps the newest 100 progress
+    events, like Spark's numRecentProgressUpdates, not one per batch."""
+    listener = LoggingQueryListener()
+    for i in range(250):
+        progress = SimpleNamespace(id="q", batchId=i, numInputRows=1)
+        listener.onQueryProgress(SimpleNamespace(progress=progress))
+    assert [p["batchId"] for p in listener.progressed] == list(range(150, 250))
 
 
 def test_connect_with_retry_succeeds_after_failures():

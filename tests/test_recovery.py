@@ -131,39 +131,6 @@ def test_dead_letter_collector(spark, tmp_path):
     assert sorted(store.deletes) == ["14", "5"]
 
 
-def test_idempotent_batch_sink_skips_replays(spark):
-    from cdc_cascade_spark.streaming.sinks import IdempotentBatchSink
-
-    applied = []
-    sink = IdempotentBatchSink(lambda df, bid: applied.append(bid))
-    df = spark.range(1)
-    sink.process(df, 0)
-    sink.process(df, 1)
-    sink.process(df, 0)  # replay after simulated crash
-    assert applied == [0, 1]
-    assert sink.replays_skipped == 1
-
-
-def test_idempotent_sink_store_survives_driver_restart(spark):
-    """Committed batch ids persisted in the sink store must suppress
-    replays even through a new sink instance (driver restart)."""
-    from cdc_cascade_spark.streaming.sinks import IdempotentBatchSink
-
-    store = InMemoryKVStore()
-    applied = []
-    df = spark.range(1)
-    sink = IdempotentBatchSink(lambda d, bid: applied.append(bid), store=store)
-    sink.process(df, 0)
-    sink.process(df, 1)
-
-    # "restart": fresh process memory, same sink system
-    sink2 = IdempotentBatchSink(lambda d, bid: applied.append(bid), store=store)
-    sink2.process(df, 1)  # replayed by the checkpoint after restart
-    sink2.process(df, 2)
-    assert applied == [0, 1, 2]
-    assert sink2.replays_skipped == 1
-
-
 def test_supervisor_budget_resets_after_healthy_run(monkeypatch):
     """max_restarts bounds CONSECUTIVE failures: a query that ran
     healthily before dying must not eat the lifetime budget."""

@@ -73,53 +73,6 @@ def test_running_counts_accumulate_across_batches(spark, tmp_path):
     assert got == want
 
 
-def test_first_seen_filter_tws_dedups_across_batches(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas variant: same cross-batch
-    dedup semantics as the applyInPandasWithState implementation.
-
-    Skipped where google.protobuf is absent: the transformWithState
-    Python driver worker is protobuf-framed and crashes at init without
-    it (this container has no protobuf and no way to install it)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from cdc_cascade_spark.streaming.stateful import first_seen_filter_tws
-
-    stream = _events_two_batches(spark, tmp_path)
-    q = (
-        first_seen_filter_tws(stream, "user_id", ["user_id", "event_id"])
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("first_seen_tws")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql(
-        "SELECT user_id, count(*) c FROM first_seen_tws GROUP BY user_id"
-    )
-    counts = {r.user_id: r.c for r in got.collect()}
-    want_users = {
-        r.user_id
-        for r in load_table(spark, SF, "events").select("user_id").distinct().collect()
-    }
-    assert set(counts) == want_users
-    assert all(c == 1 for c in counts.values()), "a key was emitted twice"
-
-    # both state-API generations agree on the emitted rows
-    batch = load_table(spark, SF, "events").select("event_id", "user_id")
-    want_first = {
-        (r.user_id, r.event_id)
-        for r in batch.groupBy("user_id").agg(F.min("event_id").alias("event_id")).collect()
-    }
-    got_rows = {
-        (r.user_id, r.event_id)
-        for r in spark.sql("SELECT user_id, event_id FROM first_seen_tws").collect()
-    }
-    assert got_rows == want_first
-
-
 def test_funnel_tracker_converges_to_batch_funnel(spark, tmp_path):
     """The streaming stage machine over in-order micro-batches must
     reach exactly the batch funnel's per-stage user sets, with one
