@@ -194,13 +194,13 @@ def start_materialized_view_pipeline(
 
     The pure-Spark analog of the reference's cache-aside rebuild
     (sequence-flows.mmd:45-53) — instead of invalidate-then-miss, the
-    view converges to the compacted table state. The sink runs on the
-    driver, bounded by the source's per-trigger cap.
+    view converges to the compacted table state. The sink parses the
+    raw batch itself and runs on the driver, bounded by the source's
+    per-trigger cap.
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        payloads = valid_events(parse_envelope(batch_df, table_schema))
-        upsert_view_batch(store, payloads, key_field)
+        upsert_view_batch(store, batch_df, table_schema, key_field)
 
     return (
         stream.writeStream.foreachBatch(process_batch)

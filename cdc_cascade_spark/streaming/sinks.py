@@ -10,10 +10,12 @@ may be re-delivered after a crash, and the sink must tolerate replay.
 backs tests. A real Redis client drops in behind the same protocol
 (import-gated — the redis package is not in this environment).
 
-Both sinks run on the driver: each pulls one compacted micro-batch,
-bounded by ``maxOffsetsPerTrigger`` / ``maxFilesPerTrigger`` (the
-analog of the reference's 100-record poll, cdc.go:124), never by table
-size.
+Both sinks run on the driver, bounded by ``maxOffsetsPerTrigger`` /
+``maxFilesPerTrigger`` (the analog of the reference's 100-record poll,
+cdc.go:124), never by table size: ``invalidate_batch`` collects the
+batch's distinct keys, and ``upsert_view_batch`` parses the raw batch
+once, reads it back in one Arrow action and keeps each key's latest
+image in a dict.
 """
 
 from __future__ import annotations
@@ -23,8 +25,7 @@ from typing import Protocol
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from cdc_cascade_spark.cdc.compaction import latest_wins
+from pyspark.sql import types as T
 
 
 class KeyValueStore(Protocol):
@@ -133,7 +134,8 @@ class RedisStore:
 
 def upsert_view_batch(
     store: KeyValueStore,
-    batch_payloads: DataFrame,
+    batch_df: DataFrame,
+    table_schema: T.StructType,
     key_field: str,
 ) -> None:
     """Maintain a materialized latest-row view (the cache-rebuild side of
@@ -141,20 +143,50 @@ def upsert_view_batch(
     repopulate the cache from the source of truth — here we push the new
     row image directly instead of waiting for a read-through miss).
 
-    Within a batch, latest-LSN-wins; deletes remove the key. Row images
-    stream through the driver, bounded by ``maxOffsetsPerTrigger``.
+    ``batch_df`` is the raw micro-batch; its ``value`` column is parsed
+    once, against a narrow schema that keeps ``after`` as the object's
+    JSON text. The stored image is that text as Spark re-emits it:
+    compact, in source field order, with source values, nulls and
+    unknown fields kept. The plan is two projections and no filter —
+    a filter on a parsed column would be pushed below the projection
+    and parse again — read back by one ``toArrow()``, bounded by the
+    source's per-trigger cap. Latest-wins runs on the driver: each key
+    keeps its highest-``lsn`` event (a null ``lsn`` loses, as with
+    ``DESC NULLS LAST``), then gets one DEL (op ``d``, or no image) or
+    one SET. Rows with no key — tombstones, corrupt values, events
+    without a usable ``after``/``before`` key — are dropped. Replaying
+    a batch writes the same images, so the sink is replay-safe.
     """
-    keyed = batch_payloads.select(
-        F.coalesce(F.col(f"after.{key_field}"), F.col(f"before.{key_field}")).alias(
-            "__key"
-        ),
-        F.col("source.lsn").alias("__lsn"),
-        "op",
-        F.to_json("after").alias("after_json"),
+    key = f"`{key_field}` {table_schema[key_field].dataType.simpleString()}"
+    narrow = (
+        f"payload struct<before: struct<{key}>, after: string, "
+        "source: struct<lsn: bigint>, op: string>"
     )
-    latest = latest_wins(keyed, ["__key"], ["__lsn"], op_col="op", delete_op=None)
-    for row in latest.select("__key", "op", "after_json").toLocalIterator():
-        if row["op"] == "d":
-            store.delete(str(row["__key"]))
+    events = batch_df.select(
+        F.from_json(F.col("value").cast("string"), narrow).payload.alias("p")
+    ).select(
+        F.coalesce(
+            F.from_json("p.after", key)[key_field], F.col(f"p.before.{key_field}")
+        ).alias("k"),
+        "p.source.lsn",
+        "p.op",
+        "p.after",
+    )
+    table = events.toArrow()
+    winners: dict = {}
+    for i, (k, lsn) in enumerate(
+        zip(table.column("k").to_pylist(), table.column("lsn").to_pylist())
+    ):
+        if k is None:
+            continue
+        held = winners.get(k)
+        if held is None or lsn is not None and (held[0] is None or lsn > held[0]):
+            winners[k] = (lsn, i)
+    latest = table.select(["op", "after"]).take([i for _, i in winners.values()])
+    for k, op, after in zip(
+        winners, latest.column("op").to_pylist(), latest.column("after").to_pylist()
+    ):
+        if op == "d" or after is None:
+            store.delete(str(k))
         else:
-            store.set(str(row["__key"]), row["after_json"])
+            store.set(str(k), after)

@@ -10,16 +10,18 @@ KV store standing in for Redis.
 from __future__ import annotations
 
 import json
+import re
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from cdc_cascade_spark.cdc.compaction import current_state, latest_wins
+from cdc_cascade_spark.cdc.compaction import current_state
 from cdc_cascade_spark.cdc.envelope import (
     invalidation_keys,
     parse_envelope,
     valid_events,
 )
+from cdc_cascade_spark.cdc.schemas import SINNERS_SCHEMA
 from cdc_cascade_spark.streaming.pipeline import (
     read_cdc_files,
     start_invalidation_pipeline,
@@ -295,8 +297,9 @@ def test_redis_store_protocol_with_stub_client():
 @st.composite
 def _shuffled_crud_batch(draw):
     """A CRUD history over a few keys, replayed per key in LSN order,
-    then shuffled into one micro-batch: returns (lines, final state)
-    where the state maps key -> name of its surviving row."""
+    mixed with tombstones, corrupt values and replays of its own
+    events, then shuffled into one micro-batch: returns (values, the
+    history's envelopes in LSN order)."""
     steps = draw(st.lists(st.tuples(st.integers(1, 4), st.booleans()),
                           min_size=1, max_size=20))
     state: dict[str, str] = {}
@@ -310,7 +313,10 @@ def _shuffled_crud_batch(draw):
             state[str(code)] = f"n{lsn}"
             op = "u" if before else "c"
             lines.append(_env(op, before, _row(code, f"n{lsn}"), lsn))
-    return draw(st.permutations(lines)), state
+    replays = draw(st.lists(st.sampled_from(lines), max_size=5))
+    noise = draw(st.lists(st.sampled_from([None, "{broken json", "[1, 2]"]),
+                          max_size=4))
+    return draw(st.permutations(lines + replays + noise)), lines
 
 
 class _RecordingStore(InMemoryKVStore):
@@ -325,6 +331,10 @@ class _RecordingStore(InMemoryKVStore):
         self.sets.append(key)
 
 
+def _raw_batch(spark, values):
+    return spark.createDataFrame([(v,) for v in values], "value string")
+
+
 @settings(
     max_examples=6,
     deadline=None,
@@ -332,37 +342,88 @@ class _RecordingStore(InMemoryKVStore):
 )
 @given(_shuffled_crud_batch())
 def test_driver_sinks_apply_one_effect_per_key(spark, batch):
-    """Over a shuffled multi-partition batch, ``upsert_view_batch``
-    leaves the store byte-equal to the latest-wins compaction (keys
-    whose last op is a delete are absent) with exactly one SET or DEL
-    per key, and ``invalidate_batch`` DELs each key that has a before
-    image exactly once."""
-    lines, state = batch
-    raw = spark.createDataFrame([(v,) for v in lines], "value string").repartition(3)
-    payloads = valid_events(parse_envelope(raw))
+    """Over a shuffled multi-partition raw batch with tombstones,
+    corrupt values and replayed events, ``upsert_view_batch`` stores
+    each key's latest ``after`` image (keys whose last op is a delete
+    are absent) with exactly one SET or DEL per key, and
+    ``invalidate_batch`` DELs each key that has a before image exactly
+    once."""
+    values, history = batch
+    raw = _raw_batch(spark, values).repartition(3)
 
     view = _RecordingStore()
-    upsert_view_batch(view, payloads, "code")
-    oracle = latest_wins(
-        payloads.select(
-            F.coalesce("after.code", "before.code").alias("k"),
-            F.col("source.lsn").alias("lsn"),
-            "op",
-            F.to_json("after").alias("after_json"),
-        ),
-        ["k"],
-        ["lsn"],
-    )
-    assert view.snapshot() == {str(r.k): r.after_json for r in oracle.collect()}
-    assert {k: json.loads(v)["name"] for k, v in view.snapshot().items()} == state
-    envs = [json.loads(v)["payload"] for v in lines]
-    touched = {str((e["after"] or e["before"])["code"]) for e in envs}
-    assert sorted(view.sets + view.deletes) == sorted(touched)
+    upsert_view_batch(view, raw, SINNERS_SCHEMA, "code")
+    envs = [json.loads(v)["payload"] for v in history]
+    latest = {str((e["after"] or e["before"])["code"]): e for e in envs}
+    want = {k: e["after"] for k, e in latest.items() if e["op"] != "d"}
+    assert {k: json.loads(v) for k, v in view.snapshot().items()} == want
+    assert sorted(view.sets + view.deletes) == sorted(latest)
 
     invalidated = InMemoryKVStore()
+    payloads = valid_events(parse_envelope(raw))
     invalidate_batch(invalidated, invalidation_keys(payloads, "code"), "code")
     with_before = {str(e["before"]["code"]) for e in envs if e["before"]}
     assert sorted(invalidated.deletes) == sorted(with_before)
+
+
+def test_view_sink_drops_keyless_events(spark):
+    """An event with no usable key — ``after.code`` missing or not an
+    integer, and no ``before`` — writes nothing; it used to be stored
+    under the key ``"None"``."""
+    keyless = [
+        _env("c", None, {"name": "b"}, 1),
+        _env("c", None, dict(_row(0, "c"), code="x"), 2),
+    ]
+    store = InMemoryKVStore()
+    upsert_view_batch(store, _raw_batch(spark, keyless + [_env("c", None, _row(7, "a"), 3)]),
+                      SINNERS_SCHEMA, "code")
+    assert {k: json.loads(v)["name"] for k, v in store.snapshot().items()} == {"7": "a"}
+
+
+def test_view_sink_stores_the_source_image_bytes(spark):
+    """The view stores the ``after`` object's compact source text:
+    non-ASCII kept, nulls kept, timestamps in the source's format."""
+    after = {"code": 9, "name": "Zoë ☃", "class": "S", "libram": None,
+             "created_at": "2024-01-01T00:00:00",
+             "updated_at": "2024-01-01T00:00:00.5"}
+    env = {"payload": {"before": None, "after": after,
+                       "source": {"lsn": 1}, "op": "c"}}
+    store = InMemoryKVStore()
+    upsert_view_batch(store, _raw_batch(spark, [json.dumps(env, ensure_ascii=False)]),
+                      SINNERS_SCHEMA, "code")
+    assert store.snapshot() == {
+        "9": json.dumps(after, ensure_ascii=False, separators=(",", ":"))}
+
+
+def test_view_sink_parses_once_in_one_action(spark, monkeypatch):
+    """The view sink runs one Spark action whose plan parses ``value``
+    once and has no window or exchange (a filter on a parsed column
+    would be pushed below the parse and evaluate it again)."""
+    raw = _raw_batch(spark, BATCH_1 + BATCH_2)
+    actions = []
+
+    def spy(name):
+        orig = getattr(type(raw), name)
+
+        def wrapped(df, *a, **kw):
+            qe = df._jdf.queryExecution()
+            actions.append((name, qe.optimizedPlan().toString(),
+                            qe.executedPlan().toString()))
+            return orig(df, *a, **kw)
+        return wrapped
+
+    for name in ("toArrow", "collect", "toLocalIterator"):
+        monkeypatch.setattr(type(raw), name, spy(name))
+    store = InMemoryKVStore()
+    upsert_view_batch(store, raw, SINNERS_SCHEMA, "code")
+    monkeypatch.undo()
+
+    assert [a[0] for a in actions] == ["toArrow"]
+    _, optimized, physical = actions[0]
+    assert len(re.findall(r"from_json\(.*?, value#\d+, ", optimized)) == 1
+    assert "Window" not in optimized + physical
+    assert "Exchange" not in physical
+    assert sorted(store.snapshot()) == ["17", "5"]
 
 
 def test_read_cdc_kafka_fails_only_at_connector_boundary(spark, monkeypatch):
