@@ -14,8 +14,8 @@ Both sinks run on the driver, bounded by ``maxOffsetsPerTrigger`` /
 ``maxFilesPerTrigger`` (the analog of the reference's 100-record poll,
 cdc.go:124), never by table size: ``invalidate_batch`` collects the
 batch's distinct keys, and ``upsert_view_batch`` parses the raw batch
-once, reads it back in one Arrow action and keeps each key's latest
-image in a dict.
+once, reads it back in one Arrow action and picks each key's latest
+image with one Arrow sort.
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ import threading
 from typing import Protocol
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -150,42 +149,44 @@ def upsert_view_batch(
     unknown fields kept. The plan is two projections and no filter —
     a filter on a parsed column would be pushed below the projection
     and parse again — read back by one ``toArrow()``, bounded by the
-    source's per-trigger cap. Latest-wins runs on the driver: each key
-    keeps its highest-``lsn`` event (a null ``lsn`` loses, as with
-    ``DESC NULLS LAST``), then gets one DEL (op ``d``, or no image) or
-    one SET. Rows with no key — tombstones, corrupt values, events
-    without a usable ``after``/``before`` key — are dropped. Replaying
-    a batch writes the same images, so the sink is replay-safe.
+    source's per-trigger cap. Latest-wins is one Arrow sort on the
+    driver: keyless rows — tombstones, corrupt values, events without
+    a usable ``after``/``before`` key — are dropped, the rest sorted by
+    key, then ``lsn`` descending with nulls last, and each key keeps
+    its first row. The sort is stable, so a null ``lsn`` loses to any
+    other and of equal ``lsn`` the earlier row wins. Each key then gets
+    one DEL (op ``d``, or no image) or one SET. Replaying a batch
+    writes the same images, so the sink is replay-safe.
     """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     key = f"`{key_field}` {table_schema[key_field].dataType.simpleString()}"
     narrow = (
         f"payload struct<before: struct<{key}>, after: string, "
         "source: struct<lsn: bigint>, op: string>"
     )
-    events = batch_df.select(
-        F.from_json(F.col("value").cast("string"), narrow).payload.alias("p")
-    ).select(
-        F.coalesce(
-            F.from_json("p.after", key)[key_field], F.col(f"p.before.{key_field}")
-        ).alias("k"),
-        "p.source.lsn",
-        "p.op",
-        "p.after",
+    events = batch_df.selectExpr(
+        f"from_json(CAST(value AS STRING), '{narrow}').payload AS p"
+    ).selectExpr(
+        f"coalesce(from_json(p.after, '{key}').`{key_field}`, "
+        f"p.before.`{key_field}`) AS k",
+        "p.source.lsn AS lsn",
+        "p.op AS op",
+        "p.after AS after",
     )
     table = events.toArrow()
-    winners: dict = {}
-    for i, (k, lsn) in enumerate(
-        zip(table.column("k").to_pylist(), table.column("lsn").to_pylist())
-    ):
-        if k is None:
-            continue
-        held = winners.get(k)
-        if held is None or lsn is not None and (held[0] is None or lsn > held[0]):
-            winners[k] = (lsn, i)
-    latest = table.select(["op", "after"]).take([i for _, i in winners.values()])
-    for k, op, after in zip(
-        winners, latest.column("op").to_pylist(), latest.column("after").to_pylist()
-    ):
+    table = table.filter(pc.is_valid(table["k"]))
+    if table.num_rows == 0:
+        return
+    table = table.take(pc.sort_indices(
+        table, [("k", "ascending"), ("lsn", "descending")], null_placement="at_end"
+    ))
+    keys = table["k"].combine_chunks()
+    latest = table.filter(pa.concat_arrays(
+        [pa.array([True]), pc.not_equal(keys[1:], keys[:-1])]
+    ))
+    for k, op, after in zip(*(latest[c].to_pylist() for c in ("k", "op", "after"))):
         if op == "d" or after is None:
             store.delete(str(k))
         else:

@@ -243,7 +243,7 @@ def test_read_all_streams_without_collect(server, replayed_rows, monkeypatch):
     """GET /read must stream the scan (chunked transfer) — never a
     full-table collect on the driver (VERDICT r3) — and the body must be
     byte-identical to json.dumps of the Spark log-replay rows."""
-    from pyspark.sql import DataFrame
+    from pyspark.sql.classic.dataframe import DataFrame
 
     for code in (3, 1, 2):
         server.service.create({"code": code, "name": f"n{code}", "class": "A"})
@@ -267,15 +267,18 @@ def test_read_all_streams_without_collect(server, replayed_rows, monkeypatch):
 
 def test_no_route_starts_a_spark_job(server, monkeypatch):
     """Every route serves from the driver-held view and cache: with
-    Spark's entry points poisoned, all still work."""
-    from pyspark.sql import DataFrame, SparkSession
+    Spark's entry points poisoned, all still work. The actions are
+    poisoned on the classic frame class, which overrides the base
+    ``pyspark.sql.DataFrame``'s."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql.classic.dataframe import DataFrame
 
     def _no_spark(*_a, **_kw):
         raise AssertionError("serving started a Spark job")
 
     monkeypatch.setattr(SparkSession, "createDataFrame", _no_spark)
-    monkeypatch.setattr(DataFrame, "collect", _no_spark)
-    monkeypatch.setattr(DataFrame, "toLocalIterator", _no_spark)
+    for action in ("collect", "toLocalIterator", "toArrow"):
+        monkeypatch.setattr(DataFrame, action, _no_spark)
 
     assert _req(server, "POST", "/api/v1/sinners/create",
                 {"code": 5, "name": "A", "class": "S"})[0] == 201

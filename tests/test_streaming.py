@@ -380,6 +380,30 @@ def test_view_sink_drops_keyless_events(spark):
     assert {k: json.loads(v)["name"] for k, v in store.snapshot().items()} == {"7": "a"}
 
 
+def test_view_sink_latest_wins_edge_cases(spark):
+    """On one partition, in row order: a null ``lsn`` loses to any
+    non-null one wherever it sits, of two events with equal ``lsn`` the
+    earlier row wins, and a batch with no keyed event writes nothing."""
+    def env(code, name, lsn):
+        e = json.loads(_env("u", None, _row(code, name), 1))
+        e["payload"]["source"]["lsn"] = lsn
+        return json.dumps(e)
+
+    rows = [env(1, "lsn3", 3), env(1, "null", None),
+            env(2, "null", None), env(2, "lsn2", 2),
+            env(3, "first", 5), env(3, "second", 5)]
+    store = _RecordingStore()
+    upsert_view_batch(store, _raw_batch(spark, rows).coalesce(1), SINNERS_SCHEMA, "code")
+    assert {k: json.loads(v)["name"] for k, v in store.snapshot().items()} == {
+        "1": "lsn3", "2": "lsn2", "3": "first"}
+    assert sorted(store.sets) == ["1", "2", "3"] and store.deletes == []
+
+    keyless = [_env("c", None, {"name": "b"}, 1), "", "{broken json"]
+    store = _RecordingStore()
+    upsert_view_batch(store, _raw_batch(spark, keyless).coalesce(1), SINNERS_SCHEMA, "code")
+    assert store.snapshot() == {} and store.sets == [] and store.deletes == []
+
+
 def test_view_sink_stores_the_source_image_bytes(spark):
     """The view stores the ``after`` object's compact source text:
     non-ASCII kept, nulls kept, timestamps in the source's format."""
